@@ -118,11 +118,6 @@ def _live_data_entries(meta, snapshot) -> List[Tuple[int, Dict[str, Any]]]:
     return entries
 
 
-def _live_data_files(meta, snapshot) -> List[str]:
-    """Data-file paths of a snapshot; raises on delete content (scope)."""
-    return [d["file_path"] for _sid, d in _live_data_entries(meta, snapshot)]
-
-
 def _spark_filters_to_expression(filters):
     """Translate PySpark DataSource ``Filter`` dataclasses into the
     engine's unbound expression tree. Returns (expression, supported):

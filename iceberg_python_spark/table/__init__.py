@@ -37,6 +37,7 @@ from typing import Any, Callable, Dict, Iterable, List, Mapping, Optional, Seque
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..expressions import (
     AlwaysFalse,
@@ -134,6 +135,57 @@ class FileScanTask:
         return self.data_file["file_path"]
 
 
+class _DeleteIndex:
+    """Live delete files of a snapshot and which of them apply to a data
+    file of a given sequence number (reference DeleteFileIndex,
+    table/delete_file_index.py:105): position deletes at delete_seq >=
+    data_seq, equality deletes strictly newer. Path disjointness makes
+    the position anti-join exact however widely a delete applies.
+
+    ``applicable`` is cached per sequence number, so planners pay
+    O(snapshots), not O(data files), to attach deletes to tasks."""
+
+    def __init__(self, entries: Iterable[Dict[str, Any]]):
+        #: (sequence number, path, bytes) of position deletes / DVs
+        self.pos: List[Tuple[int, str, int]] = []
+        #: (sequence number, path, equality field ids, bytes)
+        self.eq: List[Tuple[int, str, Tuple[int, ...], int]] = []
+        for e in entries:
+            d = e["data_file"]
+            sz = d.get("file_size_in_bytes", -1)
+            if d.get("content", 0) == 2:
+                self.eq.append((e["sequence_number"], d["file_path"], tuple(d.get("equality_ids") or ()), sz))
+            else:
+                self.pos.append((e["sequence_number"], d["file_path"], sz))
+        self._by_seq: Dict[int, Dict[str, Tuple]] = {}
+
+    @classmethod
+    def from_manifests(cls, metadata, schema: Schema, manifest_files: Iterable[Dict[str, Any]]) -> "_DeleteIndex":
+        """Index built from the delete manifests of a manifest list."""
+        return cls(
+            e
+            for m in manifest_files
+            if m.get("content", CONTENT_DATA) != CONTENT_DATA
+            for e in read_manifest(m["manifest_path"], schema, metadata.spec_by_id(m["spec_id"]), manifest=m)
+            if e["status"] != STATUS_DELETED
+        )
+
+    def applicable(self, seq: int) -> Dict[str, Tuple]:
+        """``FileScanTask`` delete fields for a data file of sequence
+        number ``seq``."""
+        hit = self._by_seq.get(seq)
+        if hit is None:
+            pos = [(p, sz) for dseq, p, sz in self.pos if dseq >= seq]
+            eq = [((p, fids), sz) for dseq, p, fids, sz in self.eq if dseq > seq]
+            hit = self._by_seq[seq] = {
+                "delete_files": tuple(p for p, _ in pos),
+                "delete_sizes": tuple(sz for _, sz in pos),
+                "eq_delete_files": tuple(pe for pe, _ in eq),
+                "eq_delete_sizes": tuple(sz for _, sz in eq),
+            }
+        return hit
+
+
 # Delete-application joins broadcast the delete-rows side only while its
 # total on-disk size (known from manifest metadata at plan time) stays
 # under this table property. An explicit broadcast() hint OVERRIDES
@@ -214,23 +266,28 @@ def _norm_lineage_file(col: Column) -> Column:
     ).otherwise(col)
 
 
-def _with_materialized_row_ids(
-    spark: SparkSession, src: DataFrame, data_files: List[Dict[str, Any]], seqs: List[int]
-) -> DataFrame:
-    """Resolve each row's v3 _row_id on a lineage read: an already-
-    materialized _row_id column wins, else the row inherits
-    file.first_row_id + physical position (spec row-lineage inheritance).
-    ``src`` must carry _ips_file/_ips_pos and a (possibly-null) _row_id."""
+def _with_row_lineage(spark: SparkSession, src: DataFrame, tasks: Sequence["FileScanTask"]) -> DataFrame:
+    """Resolve the v3 row-lineage columns on a lineage read (spec
+    implicit lineage): ``_row_id`` is an already-materialized id (v3
+    rewrites write them) or else the file's first_row_id + physical
+    position; ``_last_updated_sequence_number`` is the file's data
+    sequence number. The per-file bases broadcast-join on the
+    scheme-normalized path. ``src`` must carry _ips_file/_ips_pos and a
+    (possibly-null) _row_id."""
     rows = [
-        (_strip_uri_scheme(d["file_path"]), d.get("first_row_id"), int(s))
-        for d, s in zip(data_files, seqs)
+        (_strip_uri_scheme(t.file_path), t.data_file.get("first_row_id"), int(t.sequence_number))
+        for t in tasks
     ]
     lmap = spark.createDataFrame(rows, "lfile: string, lfirst: long, lseq: long")
     joined = src.join(
         F.broadcast(lmap), _norm_lineage_file(F.col("_ips_file")) == F.col("lfile"), "left"
     )
     resolved = F.coalesce(F.col("_row_id"), F.col("lfirst") + F.col("_ips_pos"))
-    return joined.withColumn("_row_id", resolved).drop("lfile", "lfirst", "lseq")
+    return (
+        joined.withColumn("_row_id", resolved)
+        .withColumnRenamed("lseq", "_last_updated_sequence_number")
+        .drop("lfile", "lfirst")
+    )
 
 
 def _pos_deletes_df(spark, delete_paths) -> DataFrame:
@@ -403,8 +460,6 @@ def _read_data(
     readable_fields = [f for f in file_schema.fields if not isinstance(f.field_type, UnknownType)]
     if len(readable_fields) != len(file_schema.fields):
         file_schema = Schema(*readable_fields, schema_id=file_schema.schema_id)
-    from pyspark.sql import types as T
-
     ns_fields = {
         f.name: f.field_type
         for f in file_schema.fields
@@ -436,6 +491,113 @@ def _read_data(
             us = us.cast("timestamp_ntz")
         df = df.withColumn(name, us)
     return df
+
+
+#: physical row-lineage columns a lineage read carries: the scan
+#: relation's ``_metadata.file_path`` and ``_metadata.row_index``
+_LINEAGE_COLUMNS = ("_ips_file", "_ips_pos")
+#: the optional physical v3 ``_row_id`` column (rewrites materialize it)
+_ROW_ID_FIELDS = (T.StructField("_row_id", T.LongType()),)
+
+
+def _read_tasks(
+    spark: SparkSession,
+    metadata: TableMetadata,
+    schema: Schema,
+    tasks: Sequence["FileScanTask"],
+    *,
+    lineage: bool = False,
+    extra_spark_fields: Sequence["T.StructField"] = (),
+    row_filter: Optional[BooleanExpression] = None,
+) -> DataFrame:
+    """The library's one reader of data files for scan tasks: rows of
+    ``tasks`` with their deletes applied, projected to ``schema``.
+
+    Invariant: every data-file read resolves columns by field ID from
+    the file's commit-time schema (its ``schema_id``) and name map —
+    never by the names of ``schema`` — so a column renamed after a file
+    was written, or a foreign file registered under other physical
+    names, reads its values instead of NULL (reference
+    ``_task_to_record_batches`` / ArrowProjectionVisitor,
+    io/pyarrow.py:1931).
+
+    Tasks are grouped by (schema id, format, equality-delete set, name
+    map); each group is read under its file schema, renamed through the
+    name map, and aligned to ``schema`` by field ID. Equality deletes
+    are part of the key because they apply to a file only when strictly
+    newer; the position-delete anti-join on (file, row index) is exact
+    under any grouping because file paths are disjoint. Delete sides
+    are broadcast-hinted only under the table's size threshold.
+
+    - ``lineage`` keeps ``_ips_file``/``_ips_pos``. Spark exposes
+      ``_metadata.row_index`` for parquet only: other formats get a NULL
+      position, and position deletes over them raise.
+    - ``extra_spark_fields``: optional physical columns read alongside
+      (the v3 materialized ``_row_id``; NULL where a file lacks them).
+    - ``row_filter`` (bound or unbound against ``schema``) is applied
+      after alignment."""
+    passthrough = [f.name for f in extra_spark_fields] + (list(_LINEAGE_COLUMNS) if lineage else [])
+    if not tasks:
+        fields = list(schema.to_spark().fields) + list(extra_spark_fields)
+        if lineage:
+            fields += [T.StructField("_ips_file", T.StringType()), T.StructField("_ips_pos", T.LongType())]
+        return spark.createDataFrame([], T.StructType(fields))
+    groups: Dict[Tuple, List[FileScanTask]] = {}
+    for t in tasks:
+        key = (
+            t.data_file.get("schema_id", schema.schema_id),
+            t.data_file.get("file_format", "PARQUET").upper(),
+            t.eq_delete_files,
+            tuple(sorted((t.data_file.get("name_map") or {}).items())),
+        )
+        groups.setdefault(key, []).append(t)
+    threshold = _delete_broadcast_threshold(metadata)
+    dfs = []
+    for (schema_id, fmt, eq_set, name_map), group in groups.items():
+        file_schema = metadata.schema_by_id(schema_id)
+        if name_map:
+            # name-mapped foreign files: read under the file's physical
+            # names (same ids/types); the alignment renames back by id
+            renames = dict(name_map)
+            file_schema = Schema(
+                *[_dc_replace(f, name=renames.get(f.field_id, f.name)) for f in file_schema.fields],
+                schema_id=file_schema.schema_id,
+            )
+        df = _read_data(spark, file_schema, fmt, [t.file_path for t in group], extra_spark_fields)
+        delete_paths = sorted({p for t in group for p in t.delete_files})
+        if lineage or delete_paths:
+            # captured on the scan relation itself: the _metadata
+            # pseudo-column does not resolve after a join or union
+            if fmt == "PARQUET":
+                pos = F.col("_metadata.row_index")
+            elif delete_paths:
+                raise NotImplementedError(
+                    f"position deletes over {fmt} data files need per-row positions, "
+                    "which Spark's reader only exposes for parquet (_metadata.row_index)"
+                )
+            else:
+                pos = F.lit(None).cast("long")
+            df = df.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn("_ips_pos", pos)
+        if delete_paths:
+            dels = _pos_deletes_df(spark, delete_paths)
+            df = df.join(
+                _maybe_broadcast(dels, _pos_delete_total_bytes(group), threshold),
+                (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
+                "left_anti",
+            )
+        if eq_set:
+            df = _apply_equality_deletes(
+                spark, df, eq_set, file_schema, sizes=_eq_delete_size_map(group), threshold=threshold
+            )
+        dfs.append(_align_to_schema(df, file_schema, schema, passthrough=passthrough))
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d)
+    if row_filter is not None:
+        bound = bind(row_filter, schema)
+        if not isinstance(bound, AlwaysTrue):
+            out = out.where(to_spark_column(bound))
+    return out
 
 
 class Table:
@@ -1350,20 +1512,13 @@ class Transaction:
             extra_columns=extra_columns,
         )
 
-    def _write_position_deletes(self, data_paths: List[str], bound: BooleanExpression) -> List[Dict[str, Any]]:
-        """Write sorted position-delete parquet for rows matching ``bound``
-        in the given data files, using Spark's _metadata virtual column
-        for (file, row_index). Returns content=1 DataFile dicts."""
-        from ..io.write import collect_file_stats, _list_parquet_files
-
-        spark = self._spark()
-        schema = self._schema()
-        src = spark.read.schema(schema.to_spark()).parquet(*data_paths)
-        matched = (
-            src.withColumn("_f", F.col("_metadata.file_path"))
-            .withColumn("_p", F.col("_metadata.row_index"))
-            .where(F.coalesce(to_spark_column(bound), F.lit(False)))
-            .select(F.col("_f").alias("file_path"), F.col("_p").alias("pos"))
+    def _write_position_deletes(self, tasks: List["FileScanTask"], bound: BooleanExpression) -> List[Dict[str, Any]]:
+        """Write position deletes for the live rows of ``tasks`` that
+        match ``bound``, positioned by the lineage read's (file, row
+        index). Returns content=1 DataFile dicts."""
+        src = _read_tasks(self._spark(), self.metadata, self._schema(), tasks, lineage=True)
+        matched = src.where(F.coalesce(to_spark_column(bound), F.lit(False))).select(
+            F.col("_ips_file").alias("file_path"), F.col("_ips_pos").alias("pos")
         )
         return self._write_pos_delete_rows(matched)
 
@@ -2010,30 +2165,19 @@ class Transaction:
             return
         parent = self._parent()
         all_entries = self.table._live_entries(parent)
-        entries = [e for e in all_entries if e["data_file"].get("content", 0) == CONTENT_DATA]
-        existing_deletes = [
-            (e["sequence_number"], e["data_file"]["file_path"], e["data_file"].get("file_size_in_bytes", -1))
-            for e in all_entries
-            if e["data_file"].get("content", 0) == 1
-        ]
-        existing_eq_deletes = [
-            (
-                e["sequence_number"],
-                e["data_file"]["file_path"],
-                tuple(e["data_file"].get("equality_ids") or ()),
-                e["data_file"].get("file_size_in_bytes", -1),
-            )
-            for e in all_entries
-            if e["data_file"].get("content", 0) == 2
-        ]
+        # pre-existing position AND equality deletes ride on the partial
+        # tasks, so neither mode resurrects or re-deletes rows an earlier
+        # merge-on-read delete already removed
+        delete_index = _DeleteIndex(e for e in all_entries if e["data_file"].get("content", 0) != CONTENT_DATA)
         inclusive = inclusive_metrics_evaluator(bound)
         strict = strict_metrics_evaluator(bound)
 
         full_delete: List[Dict[str, Any]] = []
-        partial: List[Dict[str, Any]] = []
-        partial_seqs: List[int] = []
-        for e in entries:
+        partial: List[FileScanTask] = []
+        for e in all_entries:
             df_ = e["data_file"]
+            if df_.get("content", 0) != CONTENT_DATA:
+                continue
             spec = self.metadata.spec_by_id(df_.get("spec_id", self.metadata.default_spec_id))
             res = compute_residual(spec, schema, bound, df_.get("partition", {}))
             if isinstance(res, AlwaysFalse):
@@ -2041,20 +2185,22 @@ class Transaction:
             if isinstance(res, AlwaysTrue) or strict(df_):
                 full_delete.append(df_)
             elif inclusive(df_):
-                partial.append(df_)
-                partial_seqs.append(e["sequence_number"])
+                seq = e["sequence_number"]
+                partial.append(
+                    FileScanTask(df_, AlwaysTrue(), sequence_number=seq, **delete_index.applicable(seq))
+                )
 
         added: List[Dict[str, Any]] = []
         rewritten_paths: Set[str] = set()
         if partial and mode == "merge-on-read":
-            non_parquet = {d.get("file_format", "PARQUET") for d in partial} - {"PARQUET"}
+            non_parquet = {t.data_file.get("file_format", "PARQUET") for t in partial} - {"PARQUET"}
             if non_parquet:
                 raise NotImplementedError(
                     f"merge-on-read delete over {sorted(non_parquet)} data files needs per-row "
                     "positions, which Spark's reader only exposes for parquet "
                     "(_metadata.row_index); use mode='copy-on-write'"
                 )
-            delete_files = self._write_position_deletes([d["file_path"] for d in partial], bound)
+            delete_files = self._write_position_deletes(partial, bound)
             removed = {d["file_path"] for d in full_delete}
             if not removed and not delete_files:
                 return
@@ -2067,49 +2213,16 @@ class Transaction:
             )
             return
         if partial:
-            paths = [d["file_path"] for d in partial]
             spark = self._spark()
-            # read the partial files with their pre-existing position AND
-            # equality deletes applied per-file (exact sequence-number
-            # applicability via the shared lineage reader), so the rewrite
-            # doesn't resurrect rows already deleted under merge-on-read
-            partial_tasks = [
-                FileScanTask(
-                    d,
-                    AlwaysTrue(),
-                    delete_files=tuple(pth for dseq, pth, _sz in existing_deletes if dseq >= s),
-                    sequence_number=s,
-                    eq_delete_files=tuple(
-                        (pth, fids) for dseq, pth, fids, _sz in existing_eq_deletes if dseq > s
-                    ),
-                    delete_sizes=tuple(sz for dseq, _pth, sz in existing_deletes if dseq >= s),
-                    eq_delete_sizes=tuple(sz for dseq, _pth, _f, sz in existing_eq_deletes if dseq > s),
-                )
-                for d, s in zip(partial, partial_seqs)
-            ]
-            any_deletes = any(t.delete_files or t.eq_delete_files for t in partial_tasks)
-            v3_lineage = self.metadata.format_version >= 3
-            if v3_lineage:
-                # v3 rewrites must PRESERVE row ids (spec: materialize
-                # _row_id into rewritten files; null = inherit from the
-                # new file's base, so already-materialized ids win)
-                from pyspark.sql import types as T
-
-                src = self._lineage_df(
-                    partial_tasks,
-                    extra_spark_fields=[T.StructField("_row_id", T.LongType())],
-                )
-                src = _with_materialized_row_ids(spark, src, partial, partial_seqs)
-                src = src.drop("_ips_file", "_ips_pos")
-            else:
-                src = self._lineage_df(partial_tasks).drop("_ips_file", "_ips_pos")
-            n_before = src.count() if any_deletes else sum(d["record_count"] for d in partial)
+            any_deletes = any(t.delete_files or t.eq_delete_files for t in partial)
+            src = self._rewrite_source_df(partial)
+            n_before = src.count() if any_deletes else sum(t.data_file["record_count"] for t in partial)
             pred = to_spark_column(bound)
             # keep rows where the predicate is NOT true (null-safe complement,
             # reference io/pyarrow.py:1093 _expression_to_complementary_pyarrow)
             remaining = src.where(~F.coalesce(pred, F.lit(False)))
             added = self._write_files(
-                remaining, extra_columns=("_row_id",) if v3_lineage else ()
+                remaining, extra_columns=("_row_id",) if self.metadata.format_version >= 3 else ()
             )
             n_after = sum(f["record_count"] for f in added)
             if n_after == n_before:
@@ -2120,7 +2233,7 @@ class Transaction:
                     _rm(f["file_path"], spark)
                 added = []
             else:
-                rewritten_paths = set(paths)
+                rewritten_paths = {t.file_path for t in partial}
 
         removed = {d["file_path"] for d in full_delete} | rewritten_paths
         if not removed and not added:
@@ -2289,7 +2402,7 @@ class Transaction:
             )
 
         v3_lineage = self.metadata.format_version >= 3
-        tasks, tgt = self._target_with_lineage(match_filter, with_row_ids=v3_lineage)
+        tasks, tgt = self._target_with_lineage(match_filter)
         tgt = tgt.cache()
         # _metadata.file_path is a URI (file:/…); manifests store the plan
         # path — map back by scheme-normalized FULL path. Basenames are NOT
@@ -2325,20 +2438,7 @@ class Transaction:
                 # rewrite (tgt is key-pruned, so it can't provide them)
                 aff_tasks = [t for t in tasks if t.file_path in affected]
                 keep_cols = list(schema.column_names) + (["_row_id"] if v3_lineage else [])
-                if v3_lineage:
-                    from pyspark.sql import types as T
-
-                    keep_src = self._lineage_df(
-                        aff_tasks, extra_spark_fields=[T.StructField("_row_id", T.LongType())]
-                    )
-                    keep_src = _with_materialized_row_ids(
-                        self._spark(),
-                        keep_src,
-                        [t.data_file for t in aff_tasks],
-                        [t.sequence_number for t in aff_tasks],
-                    )
-                else:
-                    keep_src = self._lineage_df(aff_tasks)
+                keep_src = self._rewrite_source_df(aff_tasks)
                 keep = keep_src.join(upd_keys, join_cols, "left_anti").select(*keep_cols)
                 parts.append(keep)
                 upd_cols = [src[c] for c in schema.column_names]
@@ -2368,136 +2468,33 @@ class Transaction:
             cached.unpersist()
         return UpsertResult(rows_updated=rows_updated, rows_inserted=rows_inserted)
 
-    def _rewrite_source_df(self, tasks: List["FileScanTask"]) -> DataFrame:
-        """Rows of the given tasks for a rewrite (compaction/z-order):
-        on v3 tables the resolved _row_id rides along so rewrites
+    def _lineage_read(
+        self, tasks: List["FileScanTask"], row_filter: Optional[BooleanExpression] = None
+    ) -> DataFrame:
+        """Live rows of ``tasks`` through the shared task reader, with
+        ``_ips_file``/``_ips_pos`` row lineage. On v3 tables the resolved
+        ``_row_id`` (materialized or inherited) rides along, so rewrites
         preserve row identity (spec: rewritten files materialize ids)."""
-        if self.metadata.format_version >= 3:
-            from pyspark.sql import types as T
+        spark = self._spark()
+        v3 = self.metadata.format_version >= 3
+        df = _read_tasks(
+            spark, self.metadata, self._schema(), tasks, lineage=True,
+            extra_spark_fields=_ROW_ID_FIELDS if v3 else (), row_filter=row_filter,
+        )
+        return _with_row_lineage(spark, df, tasks).drop("_last_updated_sequence_number") if v3 else df
 
-            df = self._lineage_df(
-                tasks, extra_spark_fields=[T.StructField("_row_id", T.LongType())]
-            )
-            df = _with_materialized_row_ids(
-                self._spark(), df, [t.data_file for t in tasks], [t.sequence_number for t in tasks]
-            )
-            return df.drop("_ips_file", "_ips_pos")
-        return self._lineage_df(tasks).drop("_ips_file", "_ips_pos")
+    def _rewrite_source_df(self, tasks: List["FileScanTask"]) -> DataFrame:
+        """Rows of the given tasks for a rewrite (delete, upsert,
+        compaction, z-order): the lineage read minus the physical
+        (file, position) columns; v3 rows keep their resolved _row_id."""
+        return self._lineage_read(tasks).drop(*_LINEAGE_COLUMNS)
 
-    def _target_with_lineage(
-        self, match_filter: BooleanExpression, with_row_ids: bool = False
-    ) -> Tuple[List["FileScanTask"], DataFrame]:
-        """Plan + read the pruned target WITH ``_ips_file``/``_ips_pos``
-        row lineage, existing position deletes applied (shared by the CoW
-        and MoR upsert paths). ``with_row_ids`` adds a resolved v3
-        ``_row_id`` column (materialized-or-inherited)."""
+    def _target_with_lineage(self, match_filter: BooleanExpression) -> Tuple[List["FileScanTask"], DataFrame]:
+        """Plan + read the pruned target with row lineage and existing
+        deletes applied (shared by the upsert paths)."""
         scan = DataScan(self.table, match_filter, ("*",), True, None, None, self._scan_ref())
         tasks = scan.plan_files(self.metadata)
-        if not with_row_ids:
-            return tasks, self._lineage_df(tasks, match_filter)
-        from pyspark.sql import types as T
-
-        df = self._lineage_df(
-            tasks, match_filter, extra_spark_fields=[T.StructField("_row_id", T.LongType())]
-        )
-        df = _with_materialized_row_ids(
-            self._spark(), df, [t.data_file for t in tasks], [t.sequence_number for t in tasks]
-        )
-        return tasks, df
-
-    def _lineage_df(
-        self,
-        tasks: List["FileScanTask"],
-        row_filter: Optional[BooleanExpression] = None,
-        extra_spark_fields: Sequence["T.StructField"] = (),
-    ) -> DataFrame:
-        """Read the given tasks with ``_ips_file``/``_ips_pos`` lineage
-        columns, applicable position deletes anti-joined away, and an
-        optional row filter. ``extra_spark_fields``: optional physical
-        columns (v3 materialized ``_row_id``; NULL where absent)."""
-        schema = self._schema()
-        spark = self._spark()
-        from pyspark.sql import types as T
-
-        if not tasks:
-            empty = T.StructType(
-                schema.to_spark().fields
-                + list(extra_spark_fields)
-                + [T.StructField("_ips_file", T.StringType()), T.StructField("_ips_pos", T.LongType())]
-            )
-            return spark.createDataFrame([], empty)
-        read_schema = T.StructType(list(schema.to_spark().fields) + list(extra_spark_fields))
-        by_fmt: Dict[str, List["FileScanTask"]] = {}
-        for t in tasks:
-            by_fmt.setdefault(t.data_file.get("file_format", "PARQUET").upper(), []).append(t)
-        fmt_dfs = []
-        for fmt, fmt_tasks in sorted(by_fmt.items()):
-            part = _read_paths(spark, read_schema, fmt, [t.file_path for t in fmt_tasks])
-            # capture lineage from the scan relation directly — the
-            # _metadata pseudo-column is not resolvable after a union.
-            # _metadata.row_index is PARQUET-ONLY in Spark: non-parquet
-            # files get a NULL position, which is fine until something
-            # position-based (a pos-delete apply or write) needs it —
-            # that case raises loudly instead of matching nothing.
-            if fmt == "PARQUET":
-                pos = F.col("_metadata.row_index")
-            else:
-                if any(t.delete_files for t in fmt_tasks):
-                    raise NotImplementedError(
-                        f"position deletes over {fmt} data files need per-row positions, "
-                        "which Spark's reader only exposes for parquet (_metadata.row_index)"
-                    )
-                pos = F.lit(None).cast("long")
-            fmt_dfs.append(
-                part.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn("_ips_pos", pos)
-            )
-        df = fmt_dfs[0]
-        for extra in fmt_dfs[1:]:
-            df = df.unionByName(extra)
-        delete_paths = sorted({p for t in tasks for p in t.delete_files})
-        threshold = _delete_broadcast_threshold(self.metadata)
-        if delete_paths:
-            dels = _pos_deletes_df(spark, delete_paths)
-            df = df.join(
-                _maybe_broadcast(dels, _pos_delete_total_bytes(tasks), threshold),
-                (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
-                "left_anti",
-            )
-        eq_sets = {es for t in tasks for es in t.eq_delete_files}
-        if eq_sets:
-            # sound as a union: a file grouped here may see an eq delete
-            # that is not strictly newer only if another task's is — but
-            # upsert/delete rewrites re-apply live rows, so extra matches
-            # would drop rows; keep exactness by grouping
-            by_eq: Dict[Tuple, List[FileScanTask]] = {}
-            for t in tasks:
-                by_eq.setdefault(t.eq_delete_files, []).append(t)
-            eq_sizes = _eq_delete_size_map(tasks)
-            if len(by_eq) == 1:
-                df = _apply_equality_deletes(
-                    spark, df, next(iter(by_eq)), schema, sizes=eq_sizes, threshold=threshold
-                )
-            else:
-                parts = []
-                for eq_set, grp in by_eq.items():
-                    sub = self._lineage_df(
-                        [_dc_replace(t, eq_delete_files=(), eq_delete_sizes=()) for t in grp],
-                        None,
-                        extra_spark_fields=extra_spark_fields,
-                    )
-                    parts.append(
-                        _apply_equality_deletes(
-                            spark, sub, eq_set, schema, sizes=eq_sizes, threshold=threshold
-                        )
-                    )
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
-        if row_filter is not None:
-            bound = bind(row_filter, schema)
-            if not isinstance(bound, AlwaysTrue):
-                df = df.where(to_spark_column(bound))
-        return df
+        return tasks, self._lineage_read(tasks, match_filter)
 
     def _upsert_eq_delete(
         self,
@@ -2547,7 +2544,7 @@ class Transaction:
         OVERWRITE snapshot."""
         schema = self._schema()
         v3_lineage = self.metadata.format_version >= 3
-        _tasks, tgt = self._target_with_lineage(match_filter, with_row_ids=v3_lineage)
+        _tasks, tgt = self._target_with_lineage(match_filter)
         non_parquet = {
             t.data_file.get("file_format", "PARQUET") for t in _tasks
         } - {"PARQUET"}
@@ -2890,6 +2887,52 @@ def _bound_refs(expr: BooleanExpression) -> Set[str]:
     return out
 
 
+class _PlanInputs:
+    """One scan's planning inputs, computed once and shared by the
+    driver-loop, distributed and streamed planners (see
+    ``DataScan._plan_inputs``). ``manifest_files`` is None when nothing
+    is planned client-side (no snapshot, a provably-false filter, or
+    server-side planning)."""
+
+    def __init__(
+        self,
+        metadata: TableMetadata,
+        snap: Optional[Snapshot],
+        schema: Schema,
+        bound: BooleanExpression,
+        manifest_files: Optional[List[Dict[str, Any]]] = None,
+        server: bool = False,
+    ):
+        self.metadata = metadata
+        self.snap = snap
+        self.schema = schema
+        self.bound = bound
+        self.manifest_files = manifest_files
+        self.server = server
+        self.est_entries = sum(
+            m["added_files_count"] + m["existing_files_count"]
+            for m in manifest_files or ()
+            if m.get("content", CONTENT_DATA) == CONTENT_DATA
+        )
+        threshold = int(metadata.properties.get("read.plan.distributed-threshold", "200000"))
+        #: above the threshold, pruning runs as a Spark job
+        self.distributed = manifest_files is not None and self.est_entries > threshold
+        self._part_filters: Dict[int, BooleanExpression] = {}
+
+    @property
+    def empty(self) -> bool:
+        return self.snap is None or isinstance(self.bound, AlwaysFalse)
+
+    def part_filter(self, spec_id: int) -> BooleanExpression:
+        """The row filter's inclusive projection into a spec's partition
+        space, cached per spec (reference :2669-2686)."""
+        pf = self._part_filters.get(spec_id)
+        if pf is None:
+            spec = self.metadata.spec_by_id(spec_id)
+            pf = self._part_filters[spec_id] = spec.inclusive_projection(self.schema, self.bound)
+        return pf
+
+
 class DataScan:
     """Immutable scan builder (reference table/__init__.py:1876 BaseScan,
     :2227 DataScan)."""
@@ -3026,78 +3069,57 @@ class DataScan:
             )
         return tasks
 
-    def plan_files(self, metadata: Optional[TableMetadata] = None) -> List[FileScanTask]:
+    def _plan_inputs(self, metadata: TableMetadata) -> "_PlanInputs":
+        """Everything a planner needs, computed once per scan: the
+        snapshot, scan schema, bound filter and — for client-side
+        planning — the manifest list and the distributed-planning gate."""
+        snap = self._snapshot(metadata)
+        if snap is None:
+            return _PlanInputs(metadata, None, metadata.schema(), AlwaysFalse())
+        schema = self._scan_schema(metadata, snap)
+        bound = bind(self.row_filter, schema, self.case_sensitive)
+        if isinstance(bound, AlwaysFalse):
+            return _PlanInputs(metadata, snap, schema, bound)
+        if metadata.properties.get("scan-planning-mode", "client") == "server" and hasattr(
+            self.table.catalog, "plan_table_scan"
+        ):
+            return _PlanInputs(metadata, snap, schema, bound, server=True)
+        manifest_files = read_manifest_list(snap.manifest_list, metadata.spec_by_id, schema)
+        return _PlanInputs(metadata, snap, schema, bound, manifest_files=manifest_files)
+
+    def plan_files(
+        self, metadata: Optional[TableMetadata] = None, plan: Optional["_PlanInputs"] = None
+    ) -> List[FileScanTask]:
         """Snapshot -> manifest-list -> manifest -> file pruning
         (reference ManifestGroupPlanner.plan_files :2622-2667):
         1. per-spec inclusive projection of the row filter into partition
            space prunes manifests via partition summaries;
         2. exact partition-tuple evaluation + min/max/null metrics prune
            files;
-        3. a residual is attached per file."""
+        3. a residual is attached per file.
+
+        ``plan``: inputs the caller already computed for ``metadata``."""
         metadata = metadata or self.table.metadata
-        snap = self._snapshot(metadata)
-        if snap is None:
+        plan = plan or self._plan_inputs(metadata)
+        if plan.empty:
             return []
-        schema = self._scan_schema(metadata, snap)
-        bound = bind(self.row_filter, schema, self.case_sensitive)
-        if isinstance(bound, AlwaysFalse):
-            return []
-        if metadata.properties.get("scan-planning-mode", "client") == "server" and hasattr(
-            self.table.catalog, "plan_table_scan"
-        ):
-            return self._plan_files_server(snap, bound)
-        manifest_files = read_manifest_list(snap.manifest_list, metadata.spec_by_id, schema)
-
-        # cache per-spec projections/evaluators (reference :2669-2686)
-        part_filter_by_spec: Dict[int, BooleanExpression] = {}
-        metrics_eval = inclusive_metrics_evaluator(bound)
-
-        def part_filter(spec_id: int) -> BooleanExpression:
-            if spec_id not in part_filter_by_spec:
-                spec = metadata.spec_by_id(spec_id)
-                part_filter_by_spec[spec_id] = spec.inclusive_projection(schema, bound)
-            return part_filter_by_spec[spec_id]
-
+        if plan.server:
+            return self._plan_files_server(plan.snap, plan.bound)
         # Distributed planning for huge tables (SURVEY.md §7 M5): when the
         # manifest entry count is large, pruning runs as a Spark job over
         # the manifest parquets instead of a driver loop — manifests ARE
         # DataFrames here, which is why they are parquet not Avro.
-        threshold = int(metadata.properties.get("read.plan.distributed-threshold", "200000"))
-        est_entries = sum(
-            m["added_files_count"] + m["existing_files_count"]
-            for m in manifest_files
-            if m.get("content", CONTENT_DATA) == CONTENT_DATA
-        )
-        if est_entries > threshold:
-            return self._plan_files_distributed(metadata, schema, bound, manifest_files, part_filter, metrics_eval)
+        if plan.distributed:
+            return self._plan_files_distributed(plan)
 
-        # delete-file index: (sequence_number, path) of live position
-        # deletes plus (seq, path, fids) of equality deletes (reference
-        # DeleteFileIndex, table/delete_file_index.py:105 — ours matches
-        # by sequence number; path disjointness makes the pos anti-join
-        # exact regardless)
-        deletes: List[Tuple[int, str, int]] = []
-        eq_deletes: List[Tuple[int, str, Tuple[int, ...], int]] = []
-        for m in manifest_files:
-            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
-                spec = metadata.spec_by_id(m["spec_id"])
-                for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-                    if e["status"] == STATUS_DELETED:
-                        continue
-                    d = e["data_file"]
-                    sz = d.get("file_size_in_bytes", -1)
-                    if d.get("content", 0) == 2:
-                        eq_deletes.append(
-                            (e["sequence_number"], d["file_path"], tuple(d.get("equality_ids") or ()), sz)
-                        )
-                    else:
-                        deletes.append((e["sequence_number"], d["file_path"], sz))
-
+        schema, bound = plan.schema, plan.bound
+        metrics_eval = inclusive_metrics_evaluator(bound)
+        deletes = _DeleteIndex.from_manifests(metadata, schema, plan.manifest_files)
         tasks: List[FileScanTask] = []
-        for m in manifest_files:
+        for m in plan.manifest_files:
             if m.get("content", CONTENT_DATA) != CONTENT_DATA:
                 continue
-            pf = part_filter(m["spec_id"])
+            pf = plan.part_filter(m["spec_id"])
             if isinstance(pf, AlwaysFalse):
                 continue
             if not isinstance(pf, AlwaysTrue) and m.get("partition_summaries"):
@@ -3117,26 +3139,10 @@ class DataScan:
                 if isinstance(res, AlwaysFalse):
                     continue
                 seq = e["sequence_number"]
-                applicable = tuple(path for dseq, path, _sz in deletes if dseq >= seq)
-                applicable_eq = tuple(
-                    (path, fids) for dseq, path, fids, _sz in eq_deletes if dseq > seq
-                )
-                tasks.append(
-                    FileScanTask(
-                        d,
-                        res,
-                        delete_files=applicable,
-                        sequence_number=seq,
-                        eq_delete_files=applicable_eq,
-                        delete_sizes=tuple(sz for dseq, _p, sz in deletes if dseq >= seq),
-                        eq_delete_sizes=tuple(sz for dseq, _p, _f, sz in eq_deletes if dseq > seq),
-                    )
-                )
+                tasks.append(FileScanTask(d, res, sequence_number=seq, **deletes.applicable(seq)))
         return tasks
 
-    def _plan_files_distributed(
-        self, metadata, schema, bound, manifest_files, part_filter, metrics_eval
-    ) -> List[FileScanTask]:
+    def _plan_files_distributed(self, plan: "_PlanInputs") -> List[FileScanTask]:
         """Manifest pruning as a Spark job: read all (summary-surviving)
         manifests as one DataFrame per spec, evaluate BOTH the projected
         partition filter (on the JSON-parsed partition tuple) and the
@@ -3145,37 +3151,13 @@ class DataScan:
         stats blobs never cross to the driver, so the collect is
         O(surviving files x ~100 bytes), the floor for feeding
         spark.read.parquet(*paths)."""
-        from pyspark.sql import types as T
+        from .manifests import _partition_from_json
 
-        from ..manifests_distributed import (  # local import avoids cycle
-            json_storage_spark_type,
-            metrics_spark_predicate,
-        )
-
-        spark = self.table.spark
+        schema, bound = plan.schema, plan.bound
         # delete manifests stay driver-side (orders of magnitude fewer)
-        deletes: List[Tuple[int, str, int]] = []
-        eq_deletes: List[Tuple[int, str, Tuple[int, ...], int]] = []
-        by_spec: Dict[int, List[Dict[str, Any]]] = {}
-        for m in manifest_files:
-            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
-                spec = metadata.spec_by_id(m["spec_id"])
-                for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-                    if e["status"] == STATUS_DELETED:
-                        continue
-                    d_ = e["data_file"]
-                    sz = d_.get("file_size_in_bytes", -1)
-                    if d_.get("content", 0) == 2:
-                        eq_deletes.append(
-                            (e["sequence_number"], d_["file_path"], tuple(d_.get("equality_ids") or ()), sz)
-                        )
-                    else:
-                        deletes.append((e["sequence_number"], d_["file_path"], sz))
-            else:
-                by_spec.setdefault(m["spec_id"], []).append(m)
-
+        deletes = _DeleteIndex.from_manifests(plan.metadata, schema, plan.manifest_files)
         tasks: List[FileScanTask] = []
-        for spec_id, spec, df in self._pruned_entry_dfs(metadata, schema, bound, by_spec, part_filter):
+        for spec_id, spec, df in self._pruned_entry_dfs(plan):
             rows = df.select(
                 "file_path",
                 "sequence_number",
@@ -3192,13 +3174,11 @@ class DataScan:
                 F.get_json_object("stats_json", "$.name_map").alias("_nm_json"),
                 F.get_json_object("stats_json", "$.first_row_id").cast("long").alias("_first_row_id"),
             ).collect()
-            from .manifests import _partition_from_json
-
-            # Residuals and delete applicability depend only on the partition
-            # value / sequence number, not the file — cache per distinct value
-            # so driver CPU is O(partitions + snapshots), not O(files).
+            # Residuals depend only on the partition value, not the file —
+            # cache per distinct value (delete applicability is cached per
+            # sequence number by the index) so driver CPU is
+            # O(partitions + snapshots), not O(files).
             part_cache: Dict[str, Tuple[Dict[str, Any], Any]] = {}
-            del_cache: Dict[int, Tuple[Tuple, ...]] = {}
             for r in rows:
                 hit = part_cache.get(r.partition_json or "")
                 if hit is None:
@@ -3222,45 +3202,30 @@ class DataScan:
                     d["name_map"] = {int(k): v for k, v in json.loads(r._nm_json).items()}
                 if r._first_row_id is not None:
                     d["first_row_id"] = r._first_row_id
-                dhit = del_cache.get(r.sequence_number)
-                if dhit is None:
-                    dhit = (
-                        tuple(path for dseq, path, _sz in deletes if dseq >= r.sequence_number),
-                        tuple((path, fids) for dseq, path, fids, _sz in eq_deletes if dseq > r.sequence_number),
-                        tuple(sz for dseq, _p, sz in deletes if dseq >= r.sequence_number),
-                        tuple(sz for dseq, _p, _f, sz in eq_deletes if dseq > r.sequence_number),
-                    )
-                    del_cache[r.sequence_number] = dhit
-                applicable, applicable_eq, applicable_sz, applicable_eq_sz = dhit
                 tasks.append(
-                    FileScanTask(
-                        d,
-                        res,
-                        delete_files=applicable,
-                        sequence_number=r.sequence_number,
-                        eq_delete_files=applicable_eq,
-                        delete_sizes=applicable_sz,
-                        eq_delete_sizes=applicable_eq_sz,
-                    )
+                    FileScanTask(d, res, sequence_number=r.sequence_number, **deletes.applicable(r.sequence_number))
                 )
         return tasks
 
-    def _pruned_entry_dfs(self, metadata, schema, bound, by_spec, part_filter):
-        """Per-spec DataFrames of SURVIVING manifest entries — manifest
-        summary pruning driver-side (cheap, O(manifests)), then
+    def _pruned_entry_dfs(self, plan: "_PlanInputs"):
+        """Per-spec DataFrames of SURVIVING data-manifest entries —
+        manifest summary pruning driver-side (cheap, O(manifests)), then
         partition-tuple + metrics pruning as Catalyst predicates on
         executors. Shared by the collect-based distributed planner and
         the streaming distributed read (which never collects)."""
-        from pyspark.sql import types as T
-
         from ..manifests_distributed import (  # local import avoids cycle
             json_storage_spark_type,
             metrics_spark_predicate,
         )
 
+        metadata, schema, bound = plan.metadata, plan.schema, plan.bound
+        by_spec: Dict[int, List[Dict[str, Any]]] = {}
+        for m in plan.manifest_files:
+            if m.get("content", CONTENT_DATA) == CONTENT_DATA:
+                by_spec.setdefault(m["spec_id"], []).append(m)
         spark = self.table.spark
         for spec_id, group in by_spec.items():
-            pf = part_filter(spec_id)
+            pf = plan.part_filter(spec_id)
             if isinstance(pf, AlwaysFalse):
                 continue
             spec = metadata.spec_by_id(spec_id)
@@ -3305,7 +3270,7 @@ class DataScan:
                 df = df.where(metrics_spark_predicate(bound, "stats_json"))
             yield spec_id, spec, df
 
-    def _to_df_streaming_distributed(self, metadata, snap, schema, projected):
+    def _to_df_streaming_distributed(self, plan: "_PlanInputs", projected: Schema):
         """Distributed planning that STAYS distributed into the read
         (SCALE.md r08 known limit; VERDICT r08 #2): above the
         distributed-planning threshold, the pruning job's surviving
@@ -3331,8 +3296,9 @@ class DataScan:
         Returns None (-> caller falls back to the exact task-list path)
         when the scan needs per-task state the streamed shape cannot
         carry: non-parquet data, schema evolution that name-projection
-        cannot express (renames / type promotions), server-side
-        planning, or an explicit ``read.plan.distributed-read=false``.
+        cannot express (renames / type promotions), or an explicit
+        ``read.plan.distributed-read=false``. Server-side planning never
+        reaches here (``plan.distributed`` is false for it).
         Row-level filters are re-applied post-scan, so skipping
         residual-based file pruning is sound (residuals only skip work,
         never change results).
@@ -3342,64 +3308,19 @@ class DataScan:
         part of ``expire_snapshots().commit(clean_files=True)``) — the
         age guard keeps in-flight reads safe."""
         import math
-        import posixpath
-        import uuid as _uuid
 
+        metadata, schema, bound = plan.metadata, plan.schema, plan.bound
         props = metadata.properties
         if str(props.get("read.plan.distributed-read", "true")).lower() != "true":
-            return None
-        if props.get("scan-planning-mode", "client") == "server" and hasattr(
-            self.table.catalog, "plan_table_scan"
-        ):
-            return None
-        bound = bind(self.row_filter, schema, self.case_sensitive)
-        if isinstance(bound, AlwaysFalse):
-            return None
-        manifest_files = read_manifest_list(snap.manifest_list, metadata.spec_by_id, schema)
-        threshold = int(props.get("read.plan.distributed-threshold", "200000"))
-        est_entries = sum(
-            m["added_files_count"] + m["existing_files_count"]
-            for m in manifest_files
-            if m.get("content", CONTENT_DATA) == CONTENT_DATA
-        )
-        if est_entries <= threshold:
             return None
         # MoR: the DELETE side of the index stays driver-side (orders of
         # magnitude fewer files than data — the same asymmetry the
         # reference's DeleteFileIndex relies on,
         # table/delete_file_index.py:105); the deletes themselves are
         # READ executor-side and anti-joined after the planned scan, so
-        # the data-file list still never touches the driver. Built only
-        # AFTER the threshold gate — below-threshold scans must not pay
-        # a delete-manifest walk they will repeat in plan_files.
-        pos_dels: List[Tuple[int, str, int]] = []
-        eq_dels: List[Tuple[int, str, Tuple[int, ...], int]] = []
-        for m in manifest_files:
-            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
-                spec_d = metadata.spec_by_id(m["spec_id"])
-                for e in read_manifest(m["manifest_path"], schema, spec_d, manifest=m):
-                    if e["status"] == STATUS_DELETED:
-                        continue
-                    d = e["data_file"]
-                    sz = d.get("file_size_in_bytes", -1)
-                    if d.get("content", 0) == 2:
-                        eq_dels.append(
-                            (e["sequence_number"], d["file_path"], tuple(d.get("equality_ids") or ()), sz)
-                        )
-                    else:
-                        pos_dels.append((e["sequence_number"], d["file_path"], sz))
-
-        part_filter_by_spec: Dict[int, BooleanExpression] = {}
-
-        def part_filter(spec_id: int) -> BooleanExpression:
-            if spec_id not in part_filter_by_spec:
-                spec = metadata.spec_by_id(spec_id)
-                part_filter_by_spec[spec_id] = spec.inclusive_projection(schema, bound)
-            return part_filter_by_spec[spec_id]
-
-        by_spec: Dict[int, List[Dict[str, Any]]] = {}
-        for m in manifest_files:
-            by_spec.setdefault(m["spec_id"], []).append(m)
+        # the data-file list still never touches the driver.
+        deletes = _DeleteIndex.from_manifests(metadata, schema, plan.manifest_files)
+        pos_dels, eq_dels = deletes.pos, deletes.eq
         spark = self.table.spark
         cols = [
             "file_path",
@@ -3415,10 +3336,8 @@ class DataScan:
         nm_flag = F.coalesce(F.col("stats_json").contains('"name_map"'), F.lit(False))
         dfs = [
             df.select(*cols, nm_flag.alias("has_name_map"))
-            for _sid, _spec, df in self._pruned_entry_dfs(metadata, schema, bound, by_spec, part_filter)
+            for _sid, _spec, df in self._pruned_entry_dfs(plan)
         ]
-        from pyspark.sql import types as T
-
         out_schema = T.StructType(
             [T.StructField(f.name, f.dataType, True) for f in projected.to_spark().fields]
         )
@@ -3433,9 +3352,9 @@ class DataScan:
         plan_dir = posixpath.join(
             _metadata_base(metadata),
             "scan-plans",
-            f"{int(time.time() * 1000)}-{_uuid.uuid4().hex}",
+            f"{int(time.time() * 1000)}-{uuid.uuid4().hex}",
         )
-        n_manifest_parts = int(min(64, est_entries // 50_000 + 1))
+        n_manifest_parts = int(min(64, plan.est_entries // 50_000 + 1))
         try:
             union.repartition(n_manifest_parts).write.mode("overwrite").parquet(plan_dir)
         except Exception:
@@ -3610,157 +3529,37 @@ class DataScan:
 
     def _to_df_of(self, metadata: TableMetadata, row_lineage: bool = False) -> DataFrame:
         spark = self.table.spark
-        snap = self._snapshot(metadata)
-        schema = self._scan_schema(metadata, snap)
         projected = self.projection(metadata)
         if row_lineage and metadata.format_version < 3:
             raise ValueError("row lineage needs a format-version 3 table (next-row-id)")
-        if not row_lineage and snap is not None:
-            streamed = self._to_df_streaming_distributed(metadata, snap, schema, projected)
+        plan = self._plan_inputs(metadata)
+        if plan.distributed and not row_lineage:
+            streamed = self._to_df_streaming_distributed(plan, projected)
             if streamed is not None:
                 return streamed
-        tasks = self.plan_files(metadata)
-        if not tasks:
-            out_schema = projected.to_spark()
-            if row_lineage:
-                from pyspark.sql import types as T
-
-                out_schema = T.StructType(
-                    out_schema.fields
-                    + [
-                        T.StructField("_row_id", T.LongType()),
-                        T.StructField("_last_updated_sequence_number", T.LongType()),
-                    ]
-                )
-            return spark.createDataFrame([], schema=out_schema)
-
-        # group by (file schema, format, applicable equality deletes) for
-        # field-ID-correct reads (schema evolution: renamed/added columns
-        # resolved per group, reference ArrowProjectionVisitor
-        # io/pyarrow.py:1931). Equality deletes are part of the key
-        # because they apply to a file only when strictly newer; the
-        # position-delete anti-join is exact under any grouping (file
-        # paths are disjoint) so it stays group-unioned.
-        groups: Dict[Tuple, List[FileScanTask]] = {}
-        for t in tasks:
-            key = (
-                t.data_file.get("schema_id", schema.schema_id),
-                t.data_file.get("file_format", "PARQUET"),
-                t.eq_delete_files,
-                tuple(sorted((t.data_file.get("name_map") or {}).items())),
-            )
-            groups.setdefault(key, []).append(t)
-
-        need_filter = not all(isinstance(t.residual, AlwaysTrue) for t in tasks)
-        bound = bind(self.row_filter, schema, self.case_sensitive) if need_filter else None
-
-        dfs = []
-        for (schema_id, fmt, eq_set, name_map), group in groups.items():
-            file_schema = metadata.schema_by_id(schema_id)
-            if name_map:
-                # name-mapped foreign files: physical column names differ;
-                # read under the file's names (same ids/types), then
-                # _align_to_schema renames back by field id
-                renames = dict(name_map)
-                file_schema = Schema(
-                    *[
-                        _dc_replace(f, name=renames.get(f.field_id, f.name))
-                        for f in file_schema.fields
-                    ],
-                    schema_id=file_schema.schema_id,
-                )
-            if row_lineage:
-                from pyspark.sql import types as T
-
-                # read any materialized _row_id (v3 rewrites preserve row
-                # ids by writing them; NULL where absent) and capture
-                # physical lineage BEFORE joins/projections lose the
-                # _metadata pseudo-column
-                df = _read_data(
-                    spark,
-                    file_schema,
-                    fmt,
-                    [t.file_path for t in group],
-                    extra_spark_fields=[T.StructField("_row_id", T.LongType())],
-                )
-                df = (
-                    df.withColumnRenamed("_row_id", "_ips_mat_row_id")
-                    .withColumn("_ips_lineage_file", F.col("_metadata.file_path"))
-                    .withColumn("_ips_lineage_pos", F.col("_metadata.row_index"))
-                )
-            else:
-                df = _read_data(spark, file_schema, fmt, [t.file_path for t in group])
-            delete_paths = sorted({p for t in group for p in t.delete_files})
-            threshold = _delete_broadcast_threshold(metadata)
-            if fmt.upper() != "PARQUET" and (delete_paths or row_lineage):
-                raise NotImplementedError(
-                    f"per-row positions over {fmt} data files (position deletes / row "
-                    "lineage) need Spark's parquet-only _metadata.row_index"
-                )
-            if delete_paths:
-                # MoR: drop positions listed in delete files via an
-                # anti-join on (_metadata.file_path, row_index) —
-                # broadcast-hinted only under the metadata size threshold
-                dels = _pos_deletes_df(spark, delete_paths)
-                df = (
-                    df.withColumn("_ips_file", F.col("_metadata.file_path"))
-                    .withColumn("_ips_pos", F.col("_metadata.row_index"))
-                    .join(
-                        _maybe_broadcast(dels, _pos_delete_total_bytes(group), threshold),
-                        (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
-                        "left_anti",
-                    )
-                    .drop("_ips_file", "_ips_pos")
-                )
-            if eq_set:
-                df = _apply_equality_deletes(
-                    spark, df, eq_set, file_schema,
-                    sizes=_eq_delete_size_map(group), threshold=threshold,
-                )
-            df = _align_to_schema(
-                df,
-                file_schema,
-                schema,
-                passthrough=(
-                    ("_ips_mat_row_id", "_ips_lineage_file", "_ips_lineage_pos")
-                    if row_lineage
-                    else ()
-                ),
-            )
-            dfs.append(df)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        if bound is not None and not isinstance(bound, AlwaysTrue):
-            out = out.where(to_spark_column(bound))
+        tasks = self.plan_files(metadata, plan=plan)
         sel = [F.col(f.name) for f in projected.fields]
         if row_lineage:
-            # v3 row lineage: _row_id = the file's assigned first-row-id +
-            # physical position; _last_updated_sequence_number = the file's
-            # data sequence number (spec implicit lineage columns). The
-            # per-file bases broadcast-join on the scheme-normalized path.
-            lineage_rows = [
-                (
-                    _strip_uri_scheme(t.file_path),
-                    t.data_file.get("first_row_id"),
-                    t.sequence_number,
+            non_parquet = {t.data_file.get("file_format", "PARQUET").upper() for t in tasks} - {"PARQUET"}
+            if non_parquet:
+                raise NotImplementedError(
+                    f"row lineage over {sorted(non_parquet)} data files needs per-row positions, "
+                    "which Spark's reader only exposes for parquet (_metadata.row_index)"
                 )
-                for t in tasks
-            ]
-            lmap = spark.createDataFrame(lineage_rows, "lfile: string, lfirst: long, lseq: long")
-            out = out.join(
-                F.broadcast(lmap),
-                _norm_lineage_file(F.col("_ips_lineage_file")) == F.col("lfile"),
-                "left",
-            )
-            sel += [
-                # materialized ids (v3 rewrite preservation) win; null
-                # inherits file base + physical position (spec)
-                F.coalesce(
-                    F.col("_ips_mat_row_id"), F.col("lfirst") + F.col("_ips_lineage_pos")
-                ).alias("_row_id"),
-                F.col("lseq").alias("_last_updated_sequence_number"),
-            ]
+            sel += [F.col("_row_id"), F.col("_last_updated_sequence_number")]
+        # residuals that are all AlwaysTrue need no row-level filter
+        need_filter = not all(isinstance(t.residual, AlwaysTrue) for t in tasks)
+        out = _read_tasks(
+            spark,
+            metadata,
+            plan.schema,
+            tasks,
+            lineage=row_lineage,
+            extra_spark_fields=_ROW_ID_FIELDS if row_lineage else (),
+            row_filter=plan.bound if need_filter else None,
+        )
+        if row_lineage:
+            out = _with_row_lineage(spark, out, tasks)
         out = out.select(*sel)
         if self.limit is not None:
             out = out.limit(self.limit)
@@ -3770,67 +3569,18 @@ class DataScan:
         """Metadata fast path: sum record_count where the residual is
         AlwaysTrue; read only files that still need the filter
         (reference table/__init__.py:2341-2366)."""
-        tasks = self.plan_files()
         total = 0
         to_read: List[FileScanTask] = []
-        for t in tasks:
+        for t in self.plan_files():
             if isinstance(t.residual, AlwaysTrue) and not t.delete_files and not t.eq_delete_files:
                 total += t.data_file["record_count"]
             else:
                 to_read.append(t)
         if to_read:
             metadata = self.table.metadata
-            snap = self._snapshot(metadata)
-            schema = self._scan_schema(metadata, snap)
+            schema = self._scan_schema(metadata, self._snapshot(metadata))
             bound = bind(self.row_filter, schema, self.case_sensitive)
-            spark = self.table.spark
-            by_grp: Dict[Tuple, List[FileScanTask]] = {}
-            for t in to_read:
-                by_grp.setdefault(
-                    (
-                        t.data_file.get("file_format", "PARQUET"),
-                        t.eq_delete_files,
-                        tuple(sorted((t.data_file.get("name_map") or {}).items())),
-                    ),
-                    [],
-                ).append(t)
-            for (fmt, eq_set, name_map), grp in by_grp.items():
-                read_schema = schema
-                if name_map:
-                    renames = dict(name_map)
-                    read_schema = Schema(
-                        *[_dc_replace(f, name=renames.get(f.field_id, f.name)) for f in schema.fields],
-                        schema_id=schema.schema_id,
-                    )
-                df = _read_data(spark, read_schema, fmt, [t.file_path for t in grp])
-                delete_paths = sorted({p for t in grp for p in t.delete_files})
-                threshold = _delete_broadcast_threshold(self.table.metadata)
-                if fmt.upper() != "PARQUET" and delete_paths:
-                    raise NotImplementedError(
-                        f"position deletes over {fmt} data files need Spark's "
-                        "parquet-only _metadata.row_index"
-                    )
-                if delete_paths:
-                    dels = _pos_deletes_df(spark, delete_paths)
-                    df = (
-                        df.withColumn("_ips_file", F.col("_metadata.file_path"))
-                        .withColumn("_ips_pos", F.col("_metadata.row_index"))
-                        .join(
-                            _maybe_broadcast(dels, _pos_delete_total_bytes(grp), threshold),
-                            (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
-                            "left_anti",
-                        )
-                    )
-                if eq_set:
-                    df = _apply_equality_deletes(
-                        spark, df, eq_set, read_schema,
-                        sizes=_eq_delete_size_map(grp), threshold=threshold,
-                    )
-                if name_map:
-                    df = _align_to_schema(df, read_schema, schema)
-                if not isinstance(bound, AlwaysTrue):
-                    df = df.where(to_spark_column(bound))
-                total += df.count()
+            total += _read_tasks(self.table.spark, metadata, schema, to_read, row_filter=bound).count()
         if self.limit is not None:
             total = min(total, self.limit)
         return total
@@ -4037,31 +3787,7 @@ class IncrementalAppendScan:
         meta = self.table.metadata
         schema = meta.schema()
         projected = schema.select(*self.selected_fields)
-        tasks = self.plan_files()
-        spark = self.table.spark
-        if not tasks:
-            return spark.createDataFrame([], schema=projected.to_spark())
-        # group by commit-time (schema, format) and project by field id —
-        # files appended before a rename must not read as NULL
-        groups: Dict[Tuple[int, str], List[str]] = {}
-        for t in tasks:
-            groups.setdefault(
-                (
-                    t.data_file.get("schema_id", schema.schema_id),
-                    t.data_file.get("file_format", "PARQUET").upper(),
-                ),
-                [],
-            ).append(t.file_path)
-        dfs = []
-        for (sid, fmt), paths in sorted(groups.items()):
-            file_schema = meta.schema_by_id(sid)
-            dfs.append(_align_to_schema(_read_data(spark, file_schema, fmt, paths), file_schema, schema))
-        df = dfs[0]
-        for x in dfs[1:]:
-            df = df.unionByName(x)
-        bound = bind(self.row_filter, schema)
-        if not isinstance(bound, AlwaysTrue):
-            df = df.where(to_spark_column(bound))
+        df = _read_tasks(self.table.spark, meta, schema, self.plan_files(), row_filter=self.row_filter)
         return df.select(*[F.col(f.name) for f in projected.fields])
 
 
@@ -4104,9 +3830,6 @@ class IncrementalChangelogScan:
         projected = schema.select(*self.selected_fields)
         spark = self.table.spark
         chain = _ancestor_chain(meta, self.from_id, self.to_id)
-
-        from pyspark.sql import types as T
-
         empty_schema = T.StructType(
             projected.to_spark().fields
             + [
@@ -4133,39 +3856,19 @@ class IncrementalChangelogScan:
             return out
 
         def read_files(file_map, paths, with_lineage: bool = False) -> DataFrame:
-            """Read data files grouped by their COMMIT-TIME schema (and
-            format), each group projected to the current schema by field
-            id — a column renamed inside the scan range would otherwise
-            silently read as NULL (the same per-file-schema handling the
-            main DataScan does). ``with_lineage`` captures
-            (_ips_file, _ips_pos) on each scan relation before the union."""
-            groups: Dict[Tuple[int, str], List[str]] = {}
-            for p in paths:
-                d = file_map[p]
-                groups.setdefault(
-                    (d.get("schema_id", schema.schema_id), d.get("file_format", "PARQUET").upper()),
-                    [],
-                ).append(p)
-            out_parts: List[DataFrame] = []
-            for (sid, fmt), ps in sorted(groups.items()):
-                file_schema = meta.schema_by_id(sid)
-                df = _read_data(spark, file_schema, fmt, ps)
-                passthrough: Tuple[str, ...] = ()
-                if with_lineage:
-                    if fmt != "PARQUET":
-                        raise NotImplementedError(
-                            f"changelog position-delete recovery over {fmt} files needs "
-                            "Spark's parquet-only _metadata.row_index"
-                        )
-                    df = df.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn(
-                        "_ips_pos", F.col("_metadata.row_index")
+            """Rows of the given data files through the shared task
+            reader (field-ID resolution per commit-time schema, so a
+            column renamed inside the scan range reads its values).
+            ``with_lineage`` keeps (_ips_file, _ips_pos)."""
+            tasks = [FileScanTask(file_map[p], AlwaysTrue()) for p in paths]
+            if with_lineage:
+                non_parquet = {t.data_file.get("file_format", "PARQUET").upper() for t in tasks} - {"PARQUET"}
+                if non_parquet:
+                    raise NotImplementedError(
+                        f"changelog position-delete recovery over {sorted(non_parquet)} files needs "
+                        "Spark's parquet-only _metadata.row_index"
                     )
-                    passthrough = ("_ips_file", "_ips_pos")
-                out_parts.append(_align_to_schema(df, file_schema, schema, passthrough=passthrough))
-            out = out_parts[0]
-            for x in out_parts[1:]:
-                out = out.unionByName(x)
-            return out
+            return _read_tasks(spark, meta, schema, tasks, lineage=with_lineage)
 
         parts: List[DataFrame] = []
         prev = by_content(
