@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import base64
 from decimal import Decimal
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
 from .types import (
     BinaryType,
@@ -115,19 +115,24 @@ def from_bytes(b: Optional[bytes], t: IcebergType) -> Any:
     raise ValueError(f"cannot binary-deserialize value of type {t}")
 
 
-def value_from_json(j: Any, t: IcebergType) -> Any:
-    if j is None:
-        return None
+def json_decoder(t: IcebergType) -> Callable[[Any], Any]:
+    """Inverse of :func:`value_to_json` for non-null values of type
+    ``t``, as one callable: hot decode loops dispatch on the type once,
+    not once per value."""
     if isinstance(t, _INT_TYPES):
-        return int(j)
+        return int
     if isinstance(t, (FloatType, DoubleType)):
-        return float(j)
+        return float
     if isinstance(t, BooleanType):
-        return bool(j)
+        return bool
     if isinstance(t, (StringType, UUIDType)):
-        return str(j)
+        return str
     if isinstance(t, DecimalType):
-        return Decimal(j)
+        return Decimal
     if isinstance(t, (BinaryType, FixedType)):
-        return base64.b64decode(j)
-    raise ValueError(f"cannot deserialize value of type {t}")
+        return base64.b64decode
+
+    def unsupported(j: Any) -> Any:
+        raise ValueError(f"cannot deserialize value of type {t}")
+
+    return unsupported

@@ -269,22 +269,20 @@ class _FileStats:
 
 
 def inclusive_metrics_evaluator(expr: BooleanExpression) -> Callable[[Mapping[str, Any]], bool]:
-    """might-match on file stats (reference visitors.py:1166-1475)."""
+    """might-match on file stats (reference visitors.py:1166-1475). The
+    expression is compiled into closures once per scan, so a data file
+    costs one stats lookup per predicate, not a tree walk."""
 
-    def evaluate(data_file: Mapping[str, Any]) -> bool:
-        st = _FileStats(data_file)
-        if st.record_count == 0:
-            return ROWS_CANNOT_MATCH
+    def make(p: BoundPredicate) -> Callable[[_FileStats], bool]:
+        fid = p.field.field_id
+        op, values = p.op, p.values
 
-        def pred(p: BoundPredicate) -> bool:
-            fid = p.field.field_id
-            is_float = isinstance(p.field.field_type, (FloatType, DoubleType))
+        def pred(st: _FileStats) -> bool:
             value_count = st.get(st.value_counts, fid)
             null_count = st.get(st.null_counts, fid)
             nan_count = st.get(st.nan_counts, fid)
             lower = st.get(st.lower, fid)
             upper = st.get(st.upper, fid)
-            op, values = p.op, p.values
             if op == "is_null":
                 return null_count is None or null_count > 0
             if op == "not_null":
@@ -335,7 +333,22 @@ def inclusive_metrics_evaluator(expr: BooleanExpression) -> Callable[[Mapping[st
                 return ROWS_MIGHT_MATCH
             raise ValueError(f"unknown op {op}")
 
-        return _visit(expr, pred, lambda a, b: a and b, lambda a, b: a or b, True, False)
+        return pred
+
+    test = _visit(
+        expr,
+        make,
+        lambda a, b: (lambda st: a(st) and b(st)),
+        lambda a, b: (lambda st: a(st) or b(st)),
+        lambda st: True,
+        lambda st: False,
+    )
+
+    def evaluate(data_file: Mapping[str, Any]) -> bool:
+        st = _FileStats(data_file)
+        if st.record_count == 0:
+            return ROWS_CANNOT_MATCH
+        return test(st)
 
     return evaluate
 
@@ -429,6 +442,14 @@ def residual(
     from ..expressions import bind
 
     expr = rewrite_not(expr)
+    part_schema = None
+
+    def bind_part(p: BooleanExpression) -> BooleanExpression:
+        # built on first use: a spec over a dropped column fails only if consulted
+        nonlocal part_schema
+        if part_schema is None:
+            part_schema = spec.partition_schema(schema)
+        return bind(p, part_schema)
 
     def go(e: BooleanExpression) -> BooleanExpression:
         if isinstance(e, (AlwaysTrue, AlwaysFalse)):
@@ -443,7 +464,7 @@ def residual(
             tf = part.transform
             strict = tf.strict_project(part.name, e)
             if strict is not None:
-                b = bind(strict, spec.partition_schema(schema))
+                b = bind_part(strict)
                 if not isinstance(b, (AlwaysTrue, AlwaysFalse)):
                     ok = expression_evaluator(b)(partition_values)
                 elif isinstance(b, AlwaysTrue):
@@ -454,7 +475,7 @@ def residual(
                     return AlwaysTrue()
             incl = tf.project(part.name, e)
             if incl is not None:
-                b = bind(incl, spec.partition_schema(schema))
+                b = bind_part(incl)
                 if isinstance(b, AlwaysFalse):
                     return AlwaysFalse()
                 if not isinstance(b, AlwaysTrue) and not expression_evaluator(b)(partition_values):

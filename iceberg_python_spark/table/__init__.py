@@ -2918,6 +2918,7 @@ class _PlanInputs:
         #: above the threshold, pruning runs as a Spark job
         self.distributed = manifest_files is not None and self.est_entries > threshold
         self._part_filters: Dict[int, BooleanExpression] = {}
+        self._residuals: Dict[Tuple, BooleanExpression] = {}
 
     @property
     def empty(self) -> bool:
@@ -2931,6 +2932,17 @@ class _PlanInputs:
             spec = self.metadata.spec_by_id(spec_id)
             pf = self._part_filters[spec_id] = spec.inclusive_projection(self.schema, self.bound)
         return pf
+
+    def residual(self, spec: PartitionSpec, partition: Mapping[str, Any]) -> BooleanExpression:
+        """The bound filter's residual for one partition tuple. Residuals
+        depend only on the partition value, not the file, so they are
+        cached per (spec, tuple) and planner CPU is O(partitions), not
+        O(files)."""
+        key = (spec.spec_id, tuple(partition.items()))
+        res = self._residuals.get(key)
+        if res is None:
+            res = self._residuals[key] = compute_residual(spec, self.schema, self.bound, partition)
+        return res
 
 
 class DataScan:
@@ -3135,7 +3147,7 @@ class DataScan:
                     continue
                 if not metrics_eval(d):
                     continue
-                res = compute_residual(spec, schema, bound, d.get("partition", {}))
+                res = plan.residual(spec, d.get("partition", {}))
                 if isinstance(res, AlwaysFalse):
                     continue
                 seq = e["sequence_number"]
@@ -3151,9 +3163,9 @@ class DataScan:
         stats blobs never cross to the driver, so the collect is
         O(surviving files x ~100 bytes), the floor for feeding
         spark.read.parquet(*paths)."""
-        from .manifests import _partition_from_json
+        from .manifests import _partition_decoders, _partition_from_json
 
-        schema, bound = plan.schema, plan.bound
+        schema = plan.schema
         # delete manifests stay driver-side (orders of magnitude fewer)
         deletes = _DeleteIndex.from_manifests(plan.metadata, schema, plan.manifest_files)
         tasks: List[FileScanTask] = []
@@ -3174,18 +3186,16 @@ class DataScan:
                 F.get_json_object("stats_json", "$.name_map").alias("_nm_json"),
                 F.get_json_object("stats_json", "$.first_row_id").cast("long").alias("_first_row_id"),
             ).collect()
-            # Residuals depend only on the partition value, not the file —
-            # cache per distinct value (delete applicability is cached per
-            # sequence number by the index) so driver CPU is
-            # O(partitions + snapshots), not O(files).
-            part_cache: Dict[str, Tuple[Dict[str, Any], Any]] = {}
+            # decode each distinct partition value once; its residual is
+            # cached by the plan (delete applicability per sequence number
+            # by the index), so driver CPU is O(partitions + snapshots)
+            part_decoders = _partition_decoders(spec, schema)
+            part_cache: Dict[str, Dict[str, Any]] = {}
             for r in rows:
-                hit = part_cache.get(r.partition_json or "")
-                if hit is None:
-                    part = _partition_from_json(r.partition_json, spec, schema)
-                    hit = (part, compute_residual(spec, schema, bound, part))
-                    part_cache[r.partition_json or ""] = hit
-                part, res = hit
+                part = part_cache.get(r.partition_json or "")
+                if part is None:
+                    part = part_cache[r.partition_json or ""] = _partition_from_json(r.partition_json, part_decoders)
+                res = plan.residual(spec, part)
                 if isinstance(res, AlwaysFalse):
                     continue
                 d = {

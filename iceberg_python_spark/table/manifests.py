@@ -22,12 +22,14 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Any, Dict, Iterable, List, Mapping, Optional, Tuple
+import threading
+from collections import OrderedDict
+from typing import Any, Callable, Dict, Iterable, List, Mapping, Optional, Tuple
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ..conversions import value_from_json, value_to_json
+from ..conversions import json_decoder, value_to_json
 from ..partitioning import PartitionSpec
 from ..schema import Schema
 
@@ -131,7 +133,13 @@ def _stats_to_json(data_file: Mapping[str, Any], schema: Schema) -> str:
     return json.dumps(out)
 
 
-def _stats_from_json(s: Optional[str], schema: Schema) -> Dict[str, Dict[int, Any]]:
+def _bound_decoders(schema: Schema) -> Dict[str, Tuple[int, Callable[[Any], Any]]]:
+    """JSON stats key -> (field id, value decoder) for every field of
+    ``schema``; built once per manifest, not once per bound."""
+    return {str(fid): (fid, json_decoder(schema.find_field(fid).field_type)) for fid in schema.field_ids()}
+
+
+def _stats_from_json(s: Optional[str], decoders: Mapping[str, Tuple[int, Callable[[Any], Any]]]) -> Dict[str, Any]:
     if not s:
         return {}
     raw = json.loads(s)
@@ -152,11 +160,9 @@ def _stats_from_json(s: Optional[str], schema: Schema) -> Dict[str, Dict[int, An
     for key in ("lower_bounds", "upper_bounds"):
         dec = {}
         for k, v in (raw.get(key) or {}).items():
-            try:
-                t = schema.find_field(int(k)).field_type
-            except ValueError:
-                continue
-            dec[int(k)] = value_from_json(v, t)
+            hit = decoders.get(k)
+            if hit is not None:  # else: column dropped from the schema
+                dec[hit[0]] = None if v is None else hit[1](v)
         out[key] = dec
     return out
 
@@ -168,17 +174,19 @@ def _partition_to_json(partition: Mapping[str, Any], spec: PartitionSpec, schema
     )
 
 
-def _partition_from_json(s: Optional[str], spec: PartitionSpec, schema: Schema) -> Dict[str, Any]:
+def _partition_decoders(spec: PartitionSpec, schema: Schema) -> Dict[str, Callable[[Any], Any]]:
+    """Partition field name -> value decoder under ``schema``."""
+    return {f.name: json_decoder(f.field_type) for f in spec.partition_schema(schema).fields}
+
+
+def _partition_from_json(s: Optional[str], decoders: Mapping[str, Callable[[Any], Any]]) -> Dict[str, Any]:
     if not s:
         return {}
-    part_schema = spec.partition_schema(schema)
     out = {}
     for name, v in json.loads(s).items():
-        try:
-            t = part_schema.find_field(name).field_type
-        except ValueError:
-            continue  # partition field from an older spec
-        out[name] = value_from_json(v, t)
+        dec = decoders.get(name)
+        if dec is not None:  # else: partition field from an older spec
+            out[name] = None if v is None else dec(v)
     return out
 
 
@@ -261,34 +269,145 @@ def write_manifest(
     }
 
 
+#: process-wide decode-once cache for manifests and manifest lists. By
+#: the Iceberg spec both are immutable: a committed metadata file is
+#: never rewritten in place, and every write gets a fresh uuid or
+#: snapshot-id path. So a decode keyed by the path plus everything the
+#: decode depends on (the read schema's fields, the spec's fields and,
+#: for Avro manifests, what entries inherit from the manifest-list row)
+#: never goes stale, and a repeat plan of an unchanged snapshot skips
+#: the file read and the JSON stats/partition decode. Callers get fresh
+#: entry and data_file dicts over the cached decode, so setting e.g.
+#: ``e["status"]`` (commit carry-forward, manifest merging) cannot
+#: corrupt it; the nested maps (partition, bounds, counts) are shared
+#: and must be treated as read-only. LRU, bounded by the estimated
+#: driver-heap bytes of the cached decodes (``_decode_cost``), so a wide
+#: table holds fewer entries than a narrow one under the same bound.
+_DECODE_CACHE: "OrderedDict[Tuple, Tuple[int, Any]]" = OrderedDict()
+_DECODE_CACHE_MAX_BYTES = 64 << 20
+#: ``_decode_cost`` constants, from tracemalloc over decoded parquet and
+#: Avro manifests of 1-200 long/double/timestamp/string columns
+#: (CPython 3.11): an entry with one stats column holds ~1.9-2.1 KB,
+#: each further stats value (a count or a bound) ~45-75 B plus the
+#: characters of a string bound. Both constants round up, so the
+#: estimate stays at or above the measured size.
+_ROW_BYTES = 2048
+_VALUE_BYTES = 96
+#: planners run on overlapped driver threads; an unguarded move_to_end
+#: racing a popitem would KeyError
+_DECODE_CACHE_LOCK = threading.Lock()
+_decode_cache_bytes = 0
+
+
+def clear_decode_cache() -> None:
+    """Drop every cached manifest / manifest-list decode (cold-planning
+    measurements and tests)."""
+    global _decode_cache_bytes
+    with _DECODE_CACHE_LOCK:
+        _DECODE_CACHE.clear()
+        _decode_cache_bytes = 0
+
+
+def _decode_cost(rows: List[Dict[str, Any]]) -> int:
+    """Estimated driver-heap bytes of a decoded manifest (entries) or
+    manifest list (rows): a fixed cost per row plus one per value of its
+    per-column maps (stats, partition, partition summaries), plus the
+    length of string and binary values."""
+    cost = 0
+    for r in rows:
+        cost += _ROW_BYTES
+        for v in r.get("data_file", r).values():
+            if isinstance(v, Mapping):
+                for x in v.values():
+                    cost += _VALUE_BYTES * (len(x) if isinstance(x, Mapping) else 1)
+                    if isinstance(x, (str, bytes)):
+                        cost += len(x)
+    return cost
+
+
+def _cache_get(key: Tuple) -> Any:
+    try:
+        with _DECODE_CACHE_LOCK:
+            hit = _DECODE_CACHE.get(key)
+            if hit is None:
+                return None
+            _DECODE_CACHE.move_to_end(key)
+            return hit[1]
+    except TypeError:  # a field default can in principle be unhashable
+        return None
+
+
+def _cache_put(key: Tuple, rows: List[Dict[str, Any]]) -> None:
+    global _decode_cache_bytes
+    cost = _decode_cost(rows)
+    if cost > _DECODE_CACHE_MAX_BYTES:
+        return
+    with _DECODE_CACHE_LOCK:
+        try:
+            old = _DECODE_CACHE.pop(key, None)
+        except TypeError:
+            return  # unhashable key: the decode stays uncached
+        if old is not None:
+            _decode_cache_bytes -= old[0]
+        _DECODE_CACHE[key] = (cost, rows)
+        _decode_cache_bytes += cost
+        while _decode_cache_bytes > _DECODE_CACHE_MAX_BYTES:
+            _, (c, _v) = _DECODE_CACHE.popitem(last=False)
+            _decode_cache_bytes -= c
+
+
 def read_manifest(
     path: str, schema: Schema, spec: PartitionSpec, manifest: Optional[Mapping[str, Any]] = None
 ) -> List[Dict[str, Any]]:
-    """Read manifest entries (driver-side; manifests are small).
+    """Read manifest entries (driver-side; manifests are small), decoded
+    once per process (see ``_DECODE_CACHE``).
 
     Dispatches on extension: our own manifests are parquet; ``.avro``
     manifests come from real Iceberg tables (spec format) and decode
     through :mod:`.avro_manifests` with sequence-number inheritance from
     the ``manifest`` descriptor."""
-    if path.endswith(".avro"):
-        from .avro_manifests import read_avro_manifest
+    avro = path.endswith(".avro")
+    key: Tuple = ("manifest", path, schema.fields, spec.fields)
+    if avro:
+        # entries inherit sequence number and snapshot id from the list
+        # row; the header may lack the schema id and spec id
+        inherit = (manifest.get("sequence_number", 0), manifest.get("added_snapshot_id")) if manifest else None
+        key += (schema.schema_id, spec.spec_id, inherit)
+    entries = _cache_get(key)
+    if entries is None:
+        if avro:
+            from .avro_manifests import read_avro_manifest
 
-        return read_avro_manifest(path, schema, spec, manifest=manifest)
+            entries = read_avro_manifest(path, schema, spec, manifest=manifest)
+        else:
+            entries = _decode_parquet_manifest(path, schema, spec)
+        _cache_put(key, entries)
+    return [{**e, "data_file": {**e["data_file"]}} for e in entries]
+
+
+def _decode_parquet_manifest(path: str, schema: Schema, spec: PartitionSpec) -> List[Dict[str, Any]]:
     t = _read_parquet(path)
     cols = {name: t.column(name).to_pylist() for name in t.schema.names}
+    bound_decoders = _bound_decoders(schema)
+    part_decoders = _partition_decoders(spec, schema)
+    # files of one partition share its decoded tuple (read-only, as above)
+    parts: Dict[Optional[str], Dict[str, Any]] = {}
     out = []
     for i in range(t.num_rows):
-        stats = _stats_from_json(cols["stats_json"][i], schema)
+        pj = cols["partition_json"][i]
+        part = parts.get(pj)
+        if part is None:
+            part = parts[pj] = _partition_from_json(pj, part_decoders)
         data_file = {
             "content": cols["content"][i],
             "file_path": cols["file_path"][i],
             "file_format": cols["file_format"][i],
             "spec_id": cols["spec_id"][i],
             "schema_id": cols["schema_id"][i],
-            "partition": _partition_from_json(cols["partition_json"][i], spec, schema),
+            "partition": part,
             "record_count": cols["record_count"][i],
             "file_size_in_bytes": cols["file_size_in_bytes"][i],
-            **stats,
+            **_stats_from_json(cols["stats_json"][i], bound_decoders),
         }
         out.append(
             {
@@ -385,25 +504,40 @@ def write_manifest_list(
 
 
 def read_manifest_list(path: str, spec_by_id, schema: Schema) -> List[Dict[str, Any]]:
-    if path.endswith(".avro"):
-        from .avro_manifests import read_avro_manifest_list
+    """Read a manifest list's manifest-file descriptors, decoded once per
+    process (see ``_DECODE_CACHE``)."""
+    key = ("list", path, schema.fields)
+    rows = _cache_get(key)
+    if rows is None:
+        if path.endswith(".avro"):
+            from .avro_manifests import read_avro_manifest_list
 
-        return read_avro_manifest_list(path, spec_by_id, schema)
+            rows = read_avro_manifest_list(path, spec_by_id, schema)
+        else:
+            rows = _decode_parquet_manifest_list(path, spec_by_id, schema)
+        _cache_put(key, rows)
+    return [dict(m) for m in rows]
+
+
+def _decode_parquet_manifest_list(path: str, spec_by_id, schema: Schema) -> List[Dict[str, Any]]:
     t = _read_parquet(path)
     cols = {name: t.column(name).to_pylist() for name in t.schema.names}
+    part_decoders: Dict[int, Dict[str, Callable[[Any], Any]]] = {}
     out = []
     for i in range(t.num_rows):
-        spec = spec_by_id(cols["spec_id"][i])
-        part_schema = spec.partition_schema(schema)
+        spec_id = cols["spec_id"][i]
+        decoders = part_decoders.get(spec_id)
+        if decoders is None:
+            decoders = part_decoders[spec_id] = _partition_decoders(spec_by_id(spec_id), schema)
         summaries = {}
         for name, d in json.loads(cols["partition_summaries_json"][i] or "{}").items():
-            try:
-                tt = part_schema.find_field(name).field_type
-            except ValueError:
+            dec = decoders.get(name)
+            if dec is None:
                 continue
+            lo, hi = d.get("lower"), d.get("upper")
             summaries[name] = {
-                "lower": value_from_json(d.get("lower"), tt),
-                "upper": value_from_json(d.get("upper"), tt),
+                "lower": None if lo is None else dec(lo),
+                "upper": None if hi is None else dec(hi),
                 "contains_null": d.get("contains_null", False),
                 "contains_nan": d.get("contains_nan", False),
             }
@@ -412,7 +546,7 @@ def read_manifest_list(path: str, spec_by_id, schema: Schema) -> List[Dict[str, 
                 "manifest_path": cols["manifest_path"][i],
                 "added_snapshot_id": cols["added_snapshot_id"][i],
                 "min_sequence_number": cols["min_sequence_number"][i],
-                "spec_id": cols["spec_id"][i],
+                "spec_id": spec_id,
                 "content": cols["content"][i],
                 "added_files_count": cols["added_files_count"][i],
                 "existing_files_count": cols["existing_files_count"][i],

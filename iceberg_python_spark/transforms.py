@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .conversions import _INT_TYPES  # internal values are integers (days, µs, ns)
 from .expressions import BooleanExpression, BoundPredicate, internal_to_python
 from .types import (
     BinaryType,
@@ -217,11 +218,20 @@ class Transform:
         if pred.op == "not_in":
             return UnboundPredicate("not_in", name, *[fn(v) for v in pred.values])
         if self.preserves_order:
-            # t(part) < t(X) ⇒ all rows < X (bucket width bound), etc.
-            if pred.op in ("lt", "lt_eq"):
+            # t(part) < t(X) ⇒ all rows < X (bucket width bound), etc. Over
+            # an integer domain v <= X ⇔ v < X+1 and v >= X ⇔ v > X-1, which
+            # is exact at inclusive boundaries: month(d) > month(X-1) holds
+            # for X's own month when X is its first day (reference
+            # transforms.py _truncate_number_strict)
+            step = 1 if isinstance(pred.field.field_type, _INT_TYPES) else 0
+            if pred.op == "lt":
                 return UnboundPredicate("lt", name, fn(pred.value))
-            if pred.op in ("gt", "gt_eq"):
+            if pred.op == "lt_eq":
+                return UnboundPredicate("lt", name, fn(pred.value + step))
+            if pred.op == "gt":
                 return UnboundPredicate("gt", name, fn(pred.value))
+            if pred.op == "gt_eq":
+                return UnboundPredicate("gt", name, fn(pred.value - step))
         return None
 
     def to_human_string(self, source: IcebergType, value: Any) -> str:

@@ -29,12 +29,53 @@ def _aws_mock(monkeypatch):
         yield
 
 
+def _enforce_service_cas(cat):
+    """Give the mock the conditional-update semantics of the real
+    services, at the client boundary.
+
+    moto's Glue update_table IGNORES VersionId (moto/glue/models.py
+    update_table takes none), so the service-side half of the CAS is a
+    no-op under the mock and two racers could both "win". Shim the
+    DOCUMENTED Glue semantics: UpdateTable with a stale VersionId raises
+    ConcurrentModificationException. moto's DynamoDB backend has NO
+    internal locking: its ConditionExpression evaluation is
+    check-then-act, so threads can interleave inside the mock where the
+    real service evaluates each conditional write atomically. Serialize
+    that SERVICE CALL only. In both cases the client protocol's
+    read-pointer -> conditional-update race stays fully concurrent."""
+    service_lock = threading.Lock()
+    if isinstance(cat, GlueCatalog):
+        real_update, real_get = cat.glue.update_table, cat.glue.get_table
+
+        def guarded_update(DatabaseName, TableInput, VersionId=None, **kw):
+            with service_lock:
+                if VersionId is not None:
+                    cur = real_get(DatabaseName=DatabaseName, Name=TableInput["Name"])["Table"].get("VersionId")
+                    if cur != VersionId:
+                        raise cat.glue.exceptions.ConcurrentModificationException(
+                            {"Error": {"Code": "ConcurrentModificationException",
+                                       "Message": f"version {VersionId} is stale (current {cur})"}},
+                            "UpdateTable",
+                        )
+                return real_update(DatabaseName=DatabaseName, TableInput=TableInput, **kw)
+
+        cat.glue.update_table = guarded_update
+    else:
+        real_ddb_update = cat.dynamodb.update_item
+
+        def atomic_update_item(**kw):
+            with service_lock:
+                return real_ddb_update(**kw)
+
+        cat.dynamodb.update_item = atomic_update_item
+    return cat
+
+
 @pytest.fixture(params=["glue", "dynamodb"])
 def cat(request, spark, tmp_path):
     wh = str(tmp_path / f"wh_{request.param}")
-    if request.param == "glue":
-        return GlueCatalog("awscat", wh, spark)
-    return DynamoDbCatalog("awscat", wh, spark)
+    cls = GlueCatalog if request.param == "glue" else DynamoDbCatalog
+    return _enforce_service_cas(cls("awscat", wh, spark))
 
 
 def _mk(cat, spark, name="db.t"):
@@ -224,46 +265,9 @@ def test_pointer_cas_torture(cat, spark):
 
     t = _mk(cat, spark)
 
-    if isinstance(cat, GlueCatalog):
-        # moto's update_table IGNORES VersionId (moto/glue/models.py
-        # update_table takes none), so the service-side half of the CAS
-        # is a no-op under the mock and two racers could both "win".
-        # Shim the DOCUMENTED Glue semantics at the client boundary:
-        # UpdateTable with a stale VersionId raises
-        # ConcurrentModificationException. DynamoDB runs unshimmed —
-        # moto enforces ConditionExpression correctly.
-        real_update, real_get = cat.glue.update_table, cat.glue.get_table
-        service_lock = threading.Lock()
-
-        def guarded_update(DatabaseName, TableInput, VersionId=None, **kw):
-            with service_lock:
-                if VersionId is not None:
-                    cur = real_get(DatabaseName=DatabaseName, Name=TableInput["Name"])["Table"].get("VersionId")
-                    if cur != VersionId:
-                        raise cat.glue.exceptions.ConcurrentModificationException(
-                            {"Error": {"Code": "ConcurrentModificationException",
-                                       "Message": f"version {VersionId} is stale (current {cur})"}},
-                            "UpdateTable",
-                        )
-                return real_update(DatabaseName=DatabaseName, TableInput=TableInput, **kw)
-
-        cat.glue.update_table = guarded_update
-    else:
-        # moto's DynamoDB backend has NO internal locking: its
-        # ConditionExpression evaluation is check-then-act, so
-        # barrier-synchronized threads can interleave inside the mock
-        # where the real service evaluates each conditional write
-        # atomically. Serialize the SERVICE CALL only — the client
-        # protocol's read-pointer -> conditional-update race stays fully
-        # concurrent, which is what this test exercises.
-        real_ddb_update = cat.dynamodb.update_item
-        ddb_lock = threading.Lock()
-
-        def atomic_update_item(**kw):
-            with ddb_lock:
-                return real_ddb_update(**kw)
-
-        cat.dynamodb.update_item = atomic_update_item
+    # the ``cat`` fixture gives the mock the real services' conditional
+    # update (Glue VersionId, atomic DynamoDB conditional put), so a
+    # round can only have one winner if that service-side check works
 
     base_bytes = fileio.read_bytes(t.metadata_location, spark)
     meta_dir = t.metadata_location.rsplit("/", 1)[0]

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_python_spark import spec_from_names
+from iceberg_python_spark.expressions import AlwaysTrue
 from iceberg_python_spark.schema import schema_from_spark
 
 from .conftest import SF_DIR
@@ -52,6 +53,52 @@ def test_partition_aligned_filter_drops_row_filter(table):
     # and the result is still exact
     raw = table.spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     assert df.count() == raw.where("l_shipdate < timestamp'1996-01-01'").count()
+
+
+def test_aligned_month_range_count_is_metadata_only(table):
+    # an inclusive lower and an exclusive upper bound on month boundaries:
+    # the March files match entirely (residual AlwaysTrue), so count() is
+    # a record_count sum and launches no Spark job
+    flt = "l_shipdate >= '1996-03-01' and l_shipdate < '1996-04-01'"
+    tasks = table.scan(row_filter=flt).plan_files()
+    assert tasks and all(isinstance(t.residual, AlwaysTrue) for t in tasks)
+    sc = table.spark.sparkContext
+    sc.setJobGroup("aligned-count", "aligned month count")
+    try:
+        n = table.scan(row_filter=flt).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("aligned-count")) == []
+    raw = table.spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    assert n == raw.where(flt).count()
+
+
+def test_aligned_inclusive_delete_drops_files_without_rewrite(spark, tmp_path_factory):
+    # no column stats, so only the partition tuple can prove that every row
+    # of a February file matches d >= Feb 1 and d <= Feb 29
+    from iceberg_python_spark import SqliteCatalog
+
+    cat = SqliteCatalog("aligned", str(tmp_path_factory.mktemp("wh")), spark)
+    df = spark.range(120).select("id", F.date_add(F.lit("1996-01-01").cast("date"), F.col("id").cast("int")).alias("d"))
+    schema = schema_from_spark(df.schema)
+    t = cat.create_table(
+        "db.aligned",
+        schema,
+        partition_spec=spec_from_names(schema, ("d", "month")),
+        properties={"write.metadata.metrics.default": "none"},
+    )
+    t.append(df)
+    sc = spark.sparkContext
+    sc.setJobGroup("aligned-delete", "aligned month delete")
+    try:
+        t.delete("d >= '1996-02-01' and d <= '1996-02-29'")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("aligned-delete")) == []  # nothing read
+    summary = t.current_snapshot().summary
+    assert summary.get("added-data-files", "0") == "0", summary
+    assert int(summary["deleted-records"]) == 29
+    assert t.scan().count() == 120 - 29
 
 
 def test_mor_delete_is_broadcast_anti_join(table):

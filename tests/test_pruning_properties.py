@@ -19,6 +19,7 @@ hundreds of cases quickly.
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from iceberg_python_spark import types as it
@@ -127,30 +128,96 @@ def test_partition_projection_sound(xs, op, lit, width, buckets):
                 assert proj_ev(part), f"projection lost row x={x}: {expr} -> {proj} part={part}"
 
 
+_DAY_US = 86_400_000_000
+#: (source type, transform, an internal value near 1995-01-01): every
+#: order-preserving transform over an integer-domain source
+RESIDUAL_CASES = [
+    (it.DateType(), "year", 9131),
+    (it.DateType(), "month", 9131),
+    (it.DateType(), "day", 9131),
+    (it.TimestampType(), "year", 9131 * _DAY_US),
+    (it.TimestampType(), "month", 9131 * _DAY_US),
+    (it.TimestampType(), "day", 9131 * _DAY_US),
+    (it.TimestampType(), "hour", 9131 * _DAY_US),
+    (it.TimestamptzType(), "month", 9131 * _DAY_US),
+    (it.TimestamptzType(), "hour", 9131 * _DAY_US),
+    (it.TimestampNanoType(), "day", 9131 * _DAY_US * 1000),
+    (it.TimestamptzNanoType(), "hour", 9131 * _DAY_US * 1000),
+    (it.LongType(), "truncate[10]", 1000),
+    (it.IntegerType(), "truncate[7]", 1000),
+]
+
+
+def _first_value(fn, p: int, hi: int) -> int:
+    """Smallest internal value v in [0, hi] with fn(v) >= p: the first
+    value of partition p, found through the transform's monotonicity."""
+    lo = 0
+    while lo < hi:
+        mid = (lo + hi) // 2
+        if fn(mid) >= p:
+            hi = mid
+        else:
+            lo = mid + 1
+    return lo
+
+
 @given(
-    days=st.lists(st.integers(min_value=8000, max_value=12000), min_size=1, max_size=25),
+    case=st.sampled_from(RESIDUAL_CASES),
+    rows=st.lists(st.tuples(st.integers(0, 6), st.integers(-2, 2)), min_size=1, max_size=25),
     op=ops_binary,
-    lit_day=st.integers(min_value=8000, max_value=12000),
+    lit=st.tuples(st.integers(0, 6), st.integers(-1, 1)),
 )
-@settings(max_examples=200, deadline=None)
-def test_residual_sound_month_transform(days, op, lit_day):
-    schema = Schema(it.NestedField(1, "d", it.DateType()))
-    spec = spec_from_names(schema, ("d", "month"))
-    month_of = spec.fields[0].transform.transform(it.DateType())
-    expr = bind(UnboundPredicate(op, "d", lit_day), schema)
-    row_ev = expression_evaluator(expr)
+@settings(max_examples=400, deadline=None)
+def test_residual_sound_month_transform(case, rows, op, lit):
+    """Residual soundness for month and every other order-preserving
+    transform over integer-domain sources. Rows and literals sit on and
+    next to partition boundaries, where the inclusive operators' strict
+    projection steps one unit."""
     from iceberg_python_spark.expressions import AlwaysFalse, AlwaysTrue
 
-    by_month = {}
-    for d in days:
-        by_month.setdefault(month_of(d), []).append(d)
-    for month, ds in by_month.items():
-        res = residual(spec, schema, expr, {"d_month": month})
+    src, tf, anchor = case
+    schema = Schema(it.NestedField(1, "d", src))
+    spec = spec_from_names(schema, ("d", tf))
+    part_name = spec.fields[0].name
+    fn = spec.fields[0].transform.transform(src)
+    p0 = fn(anchor)
+
+    def value(k: int, delta: int) -> int:
+        return _first_value(fn, p0 + k, 3 * anchor) + delta
+
+    values = [value(k, delta) for k, delta in rows]
+    expr = bind(UnboundPredicate(op, "d", value(*lit)), schema)
+    row_ev = expression_evaluator(expr)
+    by_part = {}
+    for d in values:
+        by_part.setdefault(fn(d), []).append(d)
+    for part, ds in by_part.items():
+        res = residual(spec, schema, expr, {part_name: part})
         if isinstance(res, AlwaysTrue):
-            assert all(row_ev({"d": d}) for d in ds), f"residual=True but non-matching row in month {month}"
+            assert all(row_ev({"d": d}) for d in ds), f"residual=True but non-matching row in {tf} {part}"
         elif isinstance(res, AlwaysFalse):
-            assert not any(row_ev({"d": d}) for d in ds), f"residual=False but matching row in month {month}"
+            assert not any(row_ev({"d": d}) for d in ds), f"residual=False but matching row in {tf} {part}"
         else:
             res_ev = expression_evaluator(res)
             for d in ds:
                 assert res_ev({"d": d}) == row_ev({"d": d}), f"residual disagrees for d={d}"
+
+
+@pytest.mark.parametrize("src,tf,anchor", RESIDUAL_CASES)
+def test_residual_exact_for_aligned_ranges(src, tf, anchor):
+    """An inclusive or exclusive range whose ends sit on partition
+    boundaries leaves no residual on the partitions inside it: ``d >=
+    start(p)`` and ``d <= start(p+1) - 1`` project strictly onto ``p``."""
+    from iceberg_python_spark.expressions import AlwaysTrue, And
+
+    schema = Schema(it.NestedField(1, "d", src))
+    spec = spec_from_names(schema, ("d", tf))
+    part_name = spec.fields[0].name
+    fn = spec.fields[0].transform.transform(src)
+    p = fn(anchor)
+    start, end = _first_value(fn, p, 3 * anchor), _first_value(fn, p + 1, 3 * anchor)
+    assert fn(start) == p == fn(end - 1) != fn(end)
+    for lo_op, lo, hi_op, hi in (("gt_eq", start, "lt", end), ("gt", start - 1, "lt_eq", end - 1)):
+        expr = bind(And(UnboundPredicate(lo_op, "d", lo), UnboundPredicate(hi_op, "d", hi)), schema)
+        res = residual(spec, schema, expr, {part_name: p})
+        assert isinstance(res, AlwaysTrue), f"{tf} over {src}: {expr} leaves {res}"

@@ -8,7 +8,10 @@ Builds a many-file partitioned table from sf0.01 lineitem (one file per
 
 - append wall-time + rows/sec (fan-out write + footer stats + commit)
 - plan_files() for a partition-aligned filter, a stats-aligned filter,
-  and no filter — driver loop AND distributed planner paths
+  and no filter — driver loop AND distributed planner paths, each timed
+  cold (manifest decode cache cleared, so every manifest and manifest
+  list is read and decoded) and warm (cache kept), medians of three, so
+  the cache cannot hide a decode regression
 - pruning fraction for each
 
 Prints one JSON line; run standalone, not inside bench.py (it mutates
@@ -19,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -42,6 +46,7 @@ def main() -> None:
 
     from iceberg_python_spark import SqliteCatalog, spec_from_names
     from iceberg_python_spark.schema import schema_from_spark
+    from iceberg_python_spark.table.manifests import clear_decode_cache
 
     wh = tempfile.mkdtemp(prefix="ips_planbench_")
     cat = SqliteCatalog("planbench", wh, spark)
@@ -75,9 +80,19 @@ def main() -> None:
         t.set_properties({"read.plan.distributed-threshold": "0" if distributed else "200000"})
         tt = t.refresh()
         scan = tt.scan(row_filter=row_filter) if row_filter else tt.scan()
-        t1 = time.time()
-        tasks = list(scan.plan_files())
-        return round(time.time() - t1, 3), len(tasks)
+
+        def median_ms(cold: bool) -> float:
+            walls = []
+            for _ in range(3):
+                if cold:
+                    clear_decode_cache()
+                t1 = time.perf_counter()
+                scan.plan_files()
+                walls.append(time.perf_counter() - t1)
+            return round(statistics.median(walls) * 1000, 1)
+
+        cold_ms = median_ms(cold=True)
+        return cold_ms, median_ms(cold=False), len(scan.plan_files())
 
     filters = {
         "none": None,
@@ -97,12 +112,13 @@ def main() -> None:
         for dist in (False, True):
             key = f"{name}_{'dist' if dist else 'driver'}"
             try:
-                sec, n = plan(f, dist)
+                cold_ms, warm_ms, n = plan(f, dist)
             except Exception as e:  # noqa: BLE001
                 out["plans"][key] = {"err": f"{type(e).__name__}: {str(e)[:80]}"}
                 continue
             out["plans"][key] = {
-                "sec": sec,
+                "cold_ms": cold_ms,
+                "warm_ms": warm_ms,
                 "files_matched": n,
                 "pruned_frac": round(1 - n / max(files_total, 1), 4),
             }
