@@ -528,16 +528,15 @@ def spark_stats_for_files(
     fmt: str = "ORC",
     properties: Optional[Dict[str, str]] = None,
 ) -> Dict[str, Dict[str, Any]]:
-    """Per-file stats via a Spark agg job grouped by _metadata.file_path —
+    """Per-file stats via a Spark agg job grouped by each row's file —
     for formats whose footers the driver-side reader doesn't parse (ORC).
     O(rows) of the given files, still fully distributed."""
     from pyspark.sql import functions as F
 
+    from ..table import _read_files
+
     modes = metrics_modes_for_schema(schema, properties)
-    reader = spark.read.schema(schema.to_spark())
-    # DataFrameReader.orc takes ONE path-or-list arg (unlike parquet's
-    # *paths); splatting shifts extra paths into keyword slots
-    df = reader.orc(list(paths)) if fmt.upper() == "ORC" else reader.parquet(*paths)
+    df = _read_files(spark, schema.to_spark(), fmt, paths, lineage=True)
     prim = [
         f for f in schema.fields
         if f.field_type.is_primitive and modes[f.field_id][0] != "none"
@@ -550,10 +549,10 @@ def spark_stats_for_files(
                 F.min(f.name).alias(f"_min_{f.field_id}"),
                 F.max(f.name).alias(f"_max_{f.field_id}"),
             ]
-    rows = df.groupBy(F.col("_metadata.file_path").alias("_fp")).agg(*aggs).collect()
+    rows = df.groupBy(F.col("_ips_file").alias("_fp")).agg(*aggs).collect()
     from ..expressions import to_internal
 
-    # _metadata.file_path is a URI (file:/...); map back to the given
+    # _ips_file is a URI (file:/...); map back to the given
     # paths by scheme-normalized FULL path — partitioned writes reuse
     # one task's part-file basename across partition dirs, so a
     # basename-keyed map would silently collapse distinct files

@@ -16,9 +16,9 @@ Reference parity map:
 
 Execution differences (Spark-first, SURVEY.md §7): planning stays
 driver-side over parquet manifests; the data plane is DataFrames —
-``spark.read.schema(...).parquet(*pruned_files)`` with per-schema-group
-field-ID alignment, residual/filters as Catalyst predicates (pushed to
-parquet), joins for upsert chosen by Catalyst/AQE.
+the pruned file list read in listing-free chunks (``_read_files``) with
+per-schema-group field-ID alignment, residual/filters as Catalyst
+predicates (pushed to parquet), joins for upsert chosen by Catalyst/AQE.
 """
 
 from __future__ import annotations
@@ -73,6 +73,7 @@ from .manifests import (
     write_manifest,
     write_manifest_list,
 )
+from .inspect import ENTRIES_SCHEMA
 from .metadata import MAIN_BRANCH, SnapshotRef, SortOrder, TableMetadata, new_table_metadata
 from .snapshots import Operation, Snapshot, SnapshotLogEntry, build_summary, partition_summary_properties
 
@@ -299,7 +300,7 @@ def _pos_deletes_df(spark, delete_paths) -> DataFrame:
     parquet_paths = [p for p in delete_paths if not p.endswith(".puffin")]
     parts = []
     if parquet_paths:
-        parts.append(spark.read.schema(_pos_delete_schema().to_spark()).parquet(*parquet_paths))
+        parts.append(_read_files(spark, _pos_delete_schema().to_spark(), "PARQUET", parquet_paths))
     if puffin_paths:
         from .puffin import dv_positions_df
 
@@ -373,7 +374,7 @@ def _apply_equality_deletes(
         fields = [schema.find_field(fid) for fid in fids]
         cols = [f.name for f in fields]
         del_schema = Schema(*fields).to_spark()
-        dels = spark.read.schema(del_schema).parquet(*sorted(paths)).dropDuplicates(cols)
+        dels = _read_files(spark, del_schema, "PARQUET", sorted(paths)).dropDuplicates(cols)
         cond = None
         for c in cols:
             clause = df[c].eqNullSafe(dels[c])
@@ -386,11 +387,10 @@ def _apply_equality_deletes(
 #: session-scoped read-plan cache: iceberg data files are immutable
 #: (a committed file is never modified in place; new data = new paths),
 #: so an identical (session, schema, format, path list) read is the
-#: same lazy DataFrame — reusing it skips Spark's driver-side file
-#: listing / InMemoryFileIndex rebuild, the dominant fixed cost of
-#: sub-second scans. Keyed by applicationId so a restarted session
-#: never sees another session's plans; LRU-bounded (plans are lazy and
-#: small, the bound is hygiene).
+#: same lazy DataFrame — reusing it skips the driver-side file-status
+#: lookups and InMemoryFileIndex build of a repeated read. Keyed by
+#: applicationId so a restarted session never sees another session's
+#: plans; LRU-bounded (plans are lazy and small, the bound is hygiene).
 _READ_PLAN_CACHE: "OrderedDict[Tuple, DataFrame]" = OrderedDict()
 _READ_PLAN_CACHE_MAX = 256
 #: guards the OrderedDict against concurrent mutation — scans may now
@@ -438,14 +438,67 @@ def _read_paths(spark: SparkSession, spark_schema, fmt: str, paths: List[str]) -
     return df
 
 
+#: Spark lists a read's paths with a Spark job (one task per path)
+#: once there are more of them than this session conf
+_LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _listing_chunks(paths: Sequence[str], threshold: int) -> List[List[str]]:
+    """Split a known file list so no chunk exceeds Spark's parallel
+    listing threshold. Only local lists (plain or ``file:`` paths) are
+    split: on a remote store (``s3a:``, ``gs:``, ``abfs:``, ``hdfs:``)
+    each listed path is a round trip, and the listing job spreads those
+    over executors, so a remote list stays one chunk."""
+    from ..io.fileio import is_remote
+
+    paths = list(paths)
+    if threshold < 1 or len(paths) <= threshold or any(is_remote(p) for p in paths):
+        return [paths]
+    return [paths[k : k + threshold] for k in range(0, len(paths), threshold)]
+
+
+def _read_files(
+    spark: SparkSession, spark_schema, fmt: str, paths: Sequence[str], *, lineage: bool = False
+) -> DataFrame:
+    """The one reader of a file list the table metadata already names —
+    data, delete and manifest files alike — as one DataFrame.
+
+    Planning already knows every file, so nothing needs listing: the
+    list is read in chunks of at most the session's parallel-listing
+    threshold (read, never set), each through ``_read_paths`` and its
+    read-plan cache, and the chunks are unioned. No read launches
+    Spark's file-listing job; a list at or under the threshold is one
+    plain read.
+
+    ``lineage`` adds ``_ips_file`` (the file's URI) and ``_ips_pos``
+    (the row's position in the file; parquet only, NULL for other
+    formats), captured from the ``_metadata`` pseudo-column on each
+    chunk's own scan relation, since ``_metadata`` does not resolve
+    through a union or join."""
+    threshold = int(spark.conf.get(_LISTING_THRESHOLD_CONF))
+    out = None
+    for chunk in _listing_chunks(paths, threshold):
+        df = _read_paths(spark, spark_schema, fmt, chunk)
+        if lineage:
+            if fmt.upper() == "PARQUET":
+                pos = F.col("_metadata.row_index")
+            else:
+                pos = F.lit(None).cast("long")
+            df = df.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn("_ips_pos", pos)
+        out = df if out is None else out.union(df)
+    return out
+
+
 def _read_data(
     spark: SparkSession,
     file_schema: Schema,
     fmt: str,
     paths: List[str],
     extra_spark_fields: Sequence["T.StructField"] = (),
+    lineage: bool = False,
 ) -> DataFrame:
-    """Data-file read honoring v3 read semantics:
+    """Data-file read honoring v3 read semantics (``lineage`` as in
+    ``_read_files``):
 
     - ``timestamp_ns``/``timestamptz_ns`` columns are stored as parquet
       TIMESTAMP(NANOS), which Spark cannot read natively: they're read
@@ -471,7 +524,7 @@ def _read_data(
             # optional physical columns (e.g. materialized v3 _row_id);
             # files lacking them read as NULL
             base = T.StructType(list(base.fields) + list(extra_spark_fields))
-        return _read_paths(spark, base, fmt, paths)
+        return _read_files(spark, base, fmt, paths, lineage=lineage)
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     base = file_schema.to_spark()
@@ -482,7 +535,7 @@ def _read_data(
         ]
         + list(extra_spark_fields)
     )
-    df = _read_paths(spark, patched, fmt, paths)
+    df = _read_files(spark, patched, fmt, paths, lineage=lineage)
     for name, t in ns_fields.items():
         # integer div — float division rounds at 2^53 and shifts
         # ns-precision timestamps by 1µs
@@ -563,21 +616,20 @@ def _read_tasks(
                 *[_dc_replace(f, name=renames.get(f.field_id, f.name)) for f in file_schema.fields],
                 schema_id=file_schema.schema_id,
             )
-        df = _read_data(spark, file_schema, fmt, [t.file_path for t in group], extra_spark_fields)
         delete_paths = sorted({p for t in group for p in t.delete_files})
-        if lineage or delete_paths:
-            # captured on the scan relation itself: the _metadata
-            # pseudo-column does not resolve after a join or union
-            if fmt == "PARQUET":
-                pos = F.col("_metadata.row_index")
-            elif delete_paths:
-                raise NotImplementedError(
-                    f"position deletes over {fmt} data files need per-row positions, "
-                    "which Spark's reader only exposes for parquet (_metadata.row_index)"
-                )
-            else:
-                pos = F.lit(None).cast("long")
-            df = df.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn("_ips_pos", pos)
+        if delete_paths and fmt != "PARQUET":
+            raise NotImplementedError(
+                f"position deletes over {fmt} data files need per-row positions, "
+                "which Spark's reader only exposes for parquet (_metadata.row_index)"
+            )
+        df = _read_data(
+            spark,
+            file_schema,
+            fmt,
+            [t.file_path for t in group],
+            extra_spark_fields,
+            lineage=lineage or bool(delete_paths),
+        )
         if delete_paths:
             dels = _pos_deletes_df(spark, delete_paths)
             df = df.join(
@@ -1171,11 +1223,10 @@ class Table:
         # explicit schema: plan build never reads manifest footers —
         # at 10^4 manifests schema inference alone would be a driver
         # bottleneck before the first task runs
-        entries_schema = spark.createDataFrame([], self.inspect._entries_schema()).schema
         refs_df = (
-            spark.read.schema(entries_schema)
-            .parquet(*man_paths)
-            .select(F.col("file_path").alias("path"))
+            _read_files(spark, ENTRIES_SCHEMA, "PARQUET", man_paths).select(
+                F.col("file_path").alias("path")
+            )
             if man_paths
             else None
         )
@@ -1741,18 +1792,24 @@ class Transaction:
                 removed |= set(pos_parquet)
             else:
                 spark = self._spark()
-                dels = _pos_deletes_df(spark, sorted(pos_parquet)).withColumn(
-                    "_src", F.col("_metadata.file_path")
+                dels = _read_files(
+                    spark, _pos_delete_schema().to_spark(), "PARQUET", sorted(pos_parquet), lineage=True
                 )
-                kept_df = spark.createDataFrame([(p,) for p in sorted(kept_paths)], "file_path string")
+                # delete rows and _ips_file carry URIs (file:/a), the
+                # manifests plain paths: compare scheme-normalized
+                kept_df = spark.createDataFrame(
+                    [(_strip_uri_scheme(p),) for p in sorted(kept_paths)], "kept string"
+                )
                 still_needed = {
-                    r._src
-                    for r in dels.join(F.broadcast(kept_df), "file_path")
-                    .select("_src")
+                    _strip_uri_scheme(r._ips_file)
+                    for r in dels.join(
+                        F.broadcast(kept_df), _norm_lineage_file(dels["file_path"]) == F.col("kept")
+                    )
+                    .select("_ips_file")
                     .distinct()
                     .collect()
                 }
-                removed |= set(pos_parquet) - still_needed
+                removed |= {p for p in pos_parquet if _strip_uri_scheme(p) not in still_needed}
         self._commit_snapshot(Operation.REPLACE, files, removed_paths=removed, snapshot_properties=snapshot_properties)
 
     def rewrite_zorder(
@@ -2171,6 +2228,8 @@ class Transaction:
         delete_index = _DeleteIndex(e for e in all_entries if e["data_file"].get("content", 0) != CONTENT_DATA)
         inclusive = inclusive_metrics_evaluator(bound)
         strict = strict_metrics_evaluator(bound)
+        # residuals cached per (spec, partition tuple), as the planners do
+        plan = _PlanInputs(self.metadata, parent, schema, bound)
 
         full_delete: List[Dict[str, Any]] = []
         partial: List[FileScanTask] = []
@@ -2179,7 +2238,7 @@ class Transaction:
             if df_.get("content", 0) != CONTENT_DATA:
                 continue
             spec = self.metadata.spec_by_id(df_.get("spec_id", self.metadata.default_spec_id))
-            res = compute_residual(spec, schema, bound, df_.get("partition", {}))
+            res = plan.residual(spec, df_.get("partition", {}))
             if isinstance(res, AlwaysFalse):
                 continue  # partition proves no rows match
             if isinstance(res, AlwaysTrue) or strict(df_):
@@ -3255,7 +3314,7 @@ class DataScan:
             avro_manifests = [m for m in survivors if m["manifest_path"].endswith(".avro")]
             parts = []
             if pq_paths:
-                parts.append(spark.read.parquet(*pq_paths))
+                parts.append(_read_files(spark, ENTRIES_SCHEMA, "PARQUET", pq_paths))
             if avro_manifests:
                 from ..manifests_distributed import avro_manifest_entries_df
 
@@ -3516,9 +3575,9 @@ class DataScan:
             for dseq, path, _sz in items:
                 by_seq.setdefault(int(dseq), []).append(path)
             parts = [
-                spark.read.schema(del_schema)
-                .parquet(*sorted(paths))
-                .withColumn("_dseq", F.lit(dseq).cast("long"))
+                _read_files(spark, del_schema, "PARQUET", sorted(paths)).withColumn(
+                    "_dseq", F.lit(dseq).cast("long")
+                )
                 for dseq, paths in sorted(by_seq.items())
             ]
             dels = parts[0]
@@ -3771,6 +3830,7 @@ class IncrementalAppendScan:
         if not snapshot_ids:
             return []
         metrics_eval = inclusive_metrics_evaluator(bound)
+        plan = _PlanInputs(meta, meta.current_snapshot(), schema, bound)
         tasks = []
         seen: Set[str] = set()
         for s in self._snapshot_range():
@@ -3787,7 +3847,7 @@ class IncrementalAppendScan:
                     seen.add(d["file_path"])
                     if not metrics_eval(d):
                         continue
-                    res = compute_residual(spec, schema, bound, d.get("partition", {}))
+                    res = plan.residual(spec, d.get("partition", {}))
                     if isinstance(res, AlwaysFalse):
                         continue
                     tasks.append(FileScanTask(d, res))

@@ -4,9 +4,9 @@ Reference: pyiceberg/table/inspect.py:68-728 (returns pa.Table; ours
 return DataFrames so they compose with the rest of a Spark pipeline —
 e.g. join files() against a quality report, or aggregate partitions()).
 
-Because manifests are parquet, ``entries``/``files`` read them with
-``spark.read.parquet`` directly — at large manifest counts this is a
-distributed scan, not a driver loop.
+Because manifests are parquet, ``entries``/``files`` read them as one
+Spark scan of the known manifest list (the table's ``_read_files``) —
+at large manifest counts this is a distributed scan, not a driver loop.
 """
 
 from __future__ import annotations
@@ -19,6 +19,26 @@ from pyspark.sql import types as T
 
 from .manifests import STATUS_DELETED
 from .snapshots import Snapshot
+
+
+#: the entry rows of a parquet manifest (``manifests._MANIFEST_SCHEMA``);
+#: manifest reads pass it, so no footer is read to infer a schema
+ENTRIES_SCHEMA = T.StructType(
+    [
+        T.StructField("status", T.IntegerType()),
+        T.StructField("snapshot_id", T.LongType()),
+        T.StructField("sequence_number", T.LongType()),
+        T.StructField("content", T.IntegerType()),
+        T.StructField("file_path", T.StringType()),
+        T.StructField("file_format", T.StringType()),
+        T.StructField("spec_id", T.IntegerType()),
+        T.StructField("schema_id", T.IntegerType()),
+        T.StructField("partition_json", T.StringType()),
+        T.StructField("record_count", T.LongType()),
+        T.StructField("file_size_in_bytes", T.LongType()),
+        T.StructField("stats_json", T.StringType()),
+    ]
+)
 
 
 class InspectTable:
@@ -102,22 +122,16 @@ class InspectTable:
     def _entries_df(self, snapshot_id: Optional[int] = None, status_not: Optional[int] = None) -> DataFrame:
         snap = self._snap(snapshot_id)
         if snap is None:
-            return self._spark.createDataFrame([], self._entries_schema())
+            return self._spark.createDataFrame([], ENTRIES_SCHEMA)
         manifest_paths = [m["manifest_path"] for m in self.table._live_manifests(snap)]
         if not manifest_paths:
-            return self._spark.createDataFrame([], self._entries_schema())
-        df = self._spark.read.parquet(*manifest_paths)
+            return self._spark.createDataFrame([], ENTRIES_SCHEMA)
+        from . import _read_files
+
+        df = _read_files(self._spark, ENTRIES_SCHEMA, "PARQUET", manifest_paths)
         if status_not is not None:
             df = df.where(F.col("status") != status_not)
         return df
-
-    @staticmethod
-    def _entries_schema() -> str:
-        return (
-            "status: int, snapshot_id: long, sequence_number: long, content: int, "
-            "file_path: string, file_format: string, spec_id: int, schema_id: int, "
-            "partition_json: string, record_count: long, file_size_in_bytes: long, stats_json: string"
-        )
 
     def entries(self, snapshot_id: Optional[int] = None) -> DataFrame:
         return self._entries_df(snapshot_id)

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from iceberg_python_spark import UNPARTITIONED
 from iceberg_python_spark.io.fileio import to_local
 from iceberg_python_spark.schema import schema_from_spark
+from iceberg_python_spark.table.inspect import ENTRIES_SCHEMA
 
 
 def _mk_table(spark, catalog, name):
@@ -189,7 +190,7 @@ def test_remove_orphan_files_many_snapshots_plan_bound(spark, catalog):
     # not a per-snapshot union tower
     assert len(man_paths) <= 200  # deduped: one manifest per append
     refs = (
-        spark.read.schema(spark.createDataFrame([], t.inspect._entries_schema()).schema)
+        spark.read.schema(ENTRIES_SCHEMA)
         .parquet(*man_paths)
         .select(F.col("file_path").alias("path"))
     )

@@ -13,6 +13,12 @@ Builds a many-file partitioned table from sf0.01 lineitem (one file per
   list is read and decoded) and warm (cache kept), medians of three, so
   the cache cannot hide a decode regression
 - pruning fraction for each
+- for a partition-aligned read, the ``to_df()`` build time and the
+  number of Spark jobs the build plus a ``noop`` write run: one, the
+  read itself; a second would be Spark's parallel file listing, which
+  a planned read must never launch. The read spans a year (~96 files),
+  since the three-month filter above names fewer files than Spark's
+  32-path listing threshold and so could never show the listing job
 
 Prints one JSON line; run standalone, not inside bench.py (it mutates
 its own scratch warehouse).
@@ -122,7 +128,33 @@ def main() -> None:
                 "files_matched": n,
                 "pruned_frac": round(1 - n / max(files_total, 1), 4),
             }
+    t.set_properties({"read.plan.distributed-threshold": "200000"})
+    out["partition_aligned_read"] = aligned_read(
+        spark, t.refresh(), "l_shipdate >= '1996-01-01' and l_shipdate < '1997-01-01'"
+    )
     print(json.dumps(out))
+
+
+def aligned_read(spark, table, row_filter: str) -> dict:
+    """Files read, ``to_df()`` build ms and the Spark jobs of build +
+    ``noop`` write, counted in a job group of their own."""
+    n_files = len(table.scan(row_filter=row_filter).plan_files())
+    sc = spark.sparkContext
+    group = "bench-planning-aligned-read"
+    sc.setJobGroup(group, "partition-aligned read")
+    try:
+        t0 = time.perf_counter()
+        df = table.scan(row_filter=row_filter).to_df()
+        build_ms = round((time.perf_counter() - t0) * 1000, 1)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return {
+        "files": n_files,
+        "to_df_ms": build_ms,
+        "spark_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+        "partitions": df.rdd.getNumPartitions(),
+    }
 
 
 if __name__ == "__main__":
