@@ -6286,78 +6286,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return lambda spark, sf_dir: fn(spark, _wh(spark, sf_dir))
 
     # ORDER MATTERS: the driver's correctness gate checks the FIRST 50
-    # entries. Round-18 window, executing the committed end-of-r17
-    # rotation plan (VERDICT r17 #9) EXACTLY: (1-37) the full
-    # r15-checked cohort — age-3 at r18, ALL of it MUST lead (zero
-    # overflow; includes the agg_multidim_combined swap documented in
-    # r17); (38-50) this round's planned code-changed re-greens —
-    # funnel_stream/heavy_hitters_stream/dedup_stream_neardup
-    # (streaming fold + scaled-shuffle unification),
-    # graph_pagerank (edge-scaled loop shuffles, VERDICT r17 #5),
-    # quality_classifier_combined (coalesce(8) fix, VERDICT r17 #2),
-    # pipeline_invariants_combined + crawl_to_corpus (observe()
-    # stage-count fusion, VERDICT r17 #3), dedup_* rows (persist
-    # lifecycle, VERDICT r17 #6), multimodal_decode_combined +
-    # multimodal_image_decode (codec vectorization, VERDICT r17 #7).
-    # Behind the window: the remaining 42 r16-checked rows (age-2) —
-    # they MUST lead r19 — then the r17-checked rows (age-1).
+    # entries, and no row's driver evidence may reach age 3 outside
+    # them (tools/rotation_state.py; tests/test_rotation_discipline.py).
+    # Round-19 window: (1-42) the full r16-checked cohort — age-3 at
+    # r19, so ALL of it MUST lead (zero overflow); (43-50) eight
+    # r17-checked rows (age-2) that exercise the reworked read path —
+    # the single task reader (_read_tasks), listing-free reads of
+    # planned file lists (_read_files) and the per-process manifest
+    # decode cache: incremental/changelog scans, MoR-after-compaction,
+    # schema-evolved reads, add_files, branch/WAP, dynamic partition
+    # overwrite and row lineage. Behind the window: the remaining 33
+    # r17-checked rows (age-2) — they MUST lead r20 — then the
+    # r18-checked rows (age-1).
     return {
         name: wrap(fn)
         for name, fn in {
-            # --- 1-37: the r15-checked cohort (age-3) ---
-            "agg_multidim_combined": _q_agg_multidim_combined,
-            "mixture_combined": _q_mixture_combined,
-            "scan_distributed_combined": _q_scan_distributed_combined,
-            "embedding_quantize": _q_embedding_quantize,
-            "orphan_cleanup": _q_orphan_cleanup,
-            "data_expectations": _q_data_expectations,
-            "bm25_topk": _q_bm25_topk,
-            "bm25_incremental": _q_bm25_incremental,
-            "events_gapfill": _q_events_gapfill,
-            "eq_delete_mor_combined": _q_eq_delete_mor_combined,
-            "tpch_q16_supplier_part_counts": _q_q16_supplier_part_counts,
-            "tpch_q17_small_qty_revenue": _q_q17_small_qty,
-            "tpch_q18_large_orders": _q_q18_large_orders,
-            "tpch_q19_discounted_revenue": _q_q19_discounted_revenue,
-            "tpch_q20_dominant_suppliers": _q_q20_dominant_suppliers,
-            "tpch_q21_waiting_suppliers": _q_q21_waiting_suppliers,
-            "tpch_q22_dormant_accounts": _q_q22_dormant_accounts,
-            "sample_stratified": _q_sample_stratified,
-            "anti_join_customers_no_orders": _q_anti_join_customers,
-            "pivot_order_status": _q_pivot_order_status,
-            "window_rank_family": _q_window_rank_family,
-            "window_topk_per_group": _q_window_topk,
-            "set_ops_nations": _q_set_ops,
-            "delete_cow": _q_delete_cow,
-            "upsert_merge": _q_upsert,
-            "upsert_merge_on_read": _q_upsert_mor,
-            "mor_delete_scan": _q_mor_delete,
-            "dedup_span_removal": _q_dedup_span_removal,
-            "dsir_select": _q_dsir_select,
-            "orc_write_scan": _q_orc_write_scan,
-            "text_chunking": _q_text_chunking,
-            "scan_filter_project": _q_scan_filter_project,
-            "scan_partition_pruned": _q_scan_partition_pruned,
-            "time_travel": _q_time_travel,
-            "events_range_join": _q_events_range_join,
-            "events_time_rollup": _q_events_time_rollup,
-            "meta_combined": _q_meta_combined,
-            # --- 38-50: r18 planned code-changed re-greens ---
-            "funnel_stream": _q_funnel_stream,
-            "heavy_hitters_stream": _q_heavy_hitters_stream,
-            "dedup_stream_neardup": _q_dedup_stream_neardup,
-            "graph_pagerank": _q_graph_pagerank,
-            "quality_classifier_combined": _q_quality_classifier_combined,
-            "pipeline_invariants_combined": _q_pipeline_invariants_combined,
-            "crawl_to_corpus": _q_crawl_to_corpus,
-            "dedup_invariants_combined": _q_dedup_invariants_combined,
-            "dedup_clusters_combined": _q_dedup_clusters_combined,
-            "dedup_incremental_lsh": _q_dedup_incremental_lsh,
-            "dedup_jaccard_blocked": _q_dedup_jaccard_blocked,
-            "multimodal_decode_combined": _q_multimodal_decode_combined,
-            "multimodal_image_decode": _q_multimodal_image_decode,
-            # ---------------- behind the window ----------------
-            # the remaining r16-checked rows (age-2) — MUST lead r19
+            # --- 1-42: the r16-checked cohort (age-3) ---
             "count_fast": _q_count_fast,
             "scan_in_filter": _q_scan_in_filter,
             "text_c4_filter": _q_text_c4_filter,
@@ -6400,8 +6344,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "events_rolling_agg": _q_events_rolling_agg,
             "audio_neardup_dedup": _q_audio_neardup_dedup,
             "events_mad_outliers": _q_events_mad_outliers,
-            # the r17-checked rows (age-1; re-checked by the committed
-            # final-state full-registry sweep each round)
+            # --- 43-50: r17-checked rows (age-2) on the reworked read path ---
+            "incremental_append_scan": _q_incremental,
+            "changelog_scan": _q_changelog_scan,
+            "mor_compacted_scan": _q_mor_compacted,
+            "schema_evolution_read": _q_schema_evolution,
+            "add_files_partitioned_scan": _q_add_files_scan,
+            "branch_wap_scan": _q_branch_wap_scan,
+            "dynamic_partition_overwrite": _q_dpo,
+            "row_lineage_invariants": _q_row_lineage_invariants,
+            # ---------------- behind the window ----------------
+            # the remaining r17-checked rows (age-2) — MUST lead r20
             "basket_affinity": _q_basket_affinity,
             "pdf_ingest": _q_pdf_ingest,
             "bpe_roundtrip": _q_bpe_roundtrip,
@@ -6411,13 +6364,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "ann_recall_combined": _q_ann_recall_combined,
             "sketch_invariants_combined": _q_sketch_invariants_combined,
             "spark_datasource_rt": _q_spark_datasource_rt,
-            "dynamic_partition_overwrite": _q_dpo,
-            "incremental_append_scan": _q_incremental,
-            "schema_evolution_read": _q_schema_evolution,
-            "mor_compacted_scan": _q_mor_compacted,
-            "add_files_partitioned_scan": _q_add_files_scan,
-            "branch_wap_scan": _q_branch_wap_scan,
-            "changelog_scan": _q_changelog_scan,
             "tpch_q2_min_cost_supplier": _q_q2_min_cost_supplier,
             "tpch_q3_shipping_priority": _q_q3,
             "tpch_q4_order_priority": _q_q4_order_priority,
@@ -6440,9 +6386,60 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "events_windowed_agg": _q_events_windowed,
             "events_sessionize": _q_events_sessionize,
             "avro_interop_scan": _q_avro_interop,
-            "row_lineage_invariants": _q_row_lineage_invariants,
             "tpch_q1_pricing_summary": _q_q1,
             "pdf_scanned_ingest": _q_pdf_scanned_ingest,
+            # the r18-checked rows (age-1; re-checked by the committed
+            # final-state full-registry sweep each round)
+            "agg_multidim_combined": _q_agg_multidim_combined,
+            "mixture_combined": _q_mixture_combined,
+            "scan_distributed_combined": _q_scan_distributed_combined,
+            "embedding_quantize": _q_embedding_quantize,
+            "orphan_cleanup": _q_orphan_cleanup,
+            "data_expectations": _q_data_expectations,
+            "bm25_topk": _q_bm25_topk,
+            "bm25_incremental": _q_bm25_incremental,
+            "events_gapfill": _q_events_gapfill,
+            "eq_delete_mor_combined": _q_eq_delete_mor_combined,
+            "tpch_q16_supplier_part_counts": _q_q16_supplier_part_counts,
+            "tpch_q17_small_qty_revenue": _q_q17_small_qty,
+            "tpch_q18_large_orders": _q_q18_large_orders,
+            "tpch_q19_discounted_revenue": _q_q19_discounted_revenue,
+            "tpch_q20_dominant_suppliers": _q_q20_dominant_suppliers,
+            "tpch_q21_waiting_suppliers": _q_q21_waiting_suppliers,
+            "tpch_q22_dormant_accounts": _q_q22_dormant_accounts,
+            "sample_stratified": _q_sample_stratified,
+            "anti_join_customers_no_orders": _q_anti_join_customers,
+            "pivot_order_status": _q_pivot_order_status,
+            "window_rank_family": _q_window_rank_family,
+            "window_topk_per_group": _q_window_topk,
+            "set_ops_nations": _q_set_ops,
+            "delete_cow": _q_delete_cow,
+            "upsert_merge": _q_upsert,
+            "upsert_merge_on_read": _q_upsert_mor,
+            "mor_delete_scan": _q_mor_delete,
+            "dedup_span_removal": _q_dedup_span_removal,
+            "dsir_select": _q_dsir_select,
+            "orc_write_scan": _q_orc_write_scan,
+            "text_chunking": _q_text_chunking,
+            "scan_filter_project": _q_scan_filter_project,
+            "scan_partition_pruned": _q_scan_partition_pruned,
+            "time_travel": _q_time_travel,
+            "events_range_join": _q_events_range_join,
+            "events_time_rollup": _q_events_time_rollup,
+            "meta_combined": _q_meta_combined,
+            "funnel_stream": _q_funnel_stream,
+            "heavy_hitters_stream": _q_heavy_hitters_stream,
+            "dedup_stream_neardup": _q_dedup_stream_neardup,
+            "graph_pagerank": _q_graph_pagerank,
+            "quality_classifier_combined": _q_quality_classifier_combined,
+            "pipeline_invariants_combined": _q_pipeline_invariants_combined,
+            "crawl_to_corpus": _q_crawl_to_corpus,
+            "dedup_invariants_combined": _q_dedup_invariants_combined,
+            "dedup_clusters_combined": _q_dedup_clusters_combined,
+            "dedup_incremental_lsh": _q_dedup_incremental_lsh,
+            "dedup_jaccard_blocked": _q_dedup_jaccard_blocked,
+            "multimodal_decode_combined": _q_multimodal_decode_combined,
+            "multimodal_image_decode": _q_multimodal_image_decode,
         }.items()
     }
 
