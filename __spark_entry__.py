@@ -3029,6 +3029,7 @@ def _q_dedup_stream_neardup(spark, env):
     import uuid as _uuid
 
     from iceberg_python_spark import schema_from_spark
+    from iceberg_python_spark.operators._local import scaled_shuffle
     from iceberg_python_spark.streaming import append_stream_neardup
 
     cat = env["catalog"]
@@ -3051,9 +3052,9 @@ def _q_dedup_stream_neardup(spark, env):
     docs.coalesce(1).write.mode("append").parquet(src)
     # ~100-doc batches: the sink's minhash/LSH joins collapse to 2
     # shuffle partitions instead of 32 near-empty ones (guide §2 /
-    # _scaled_shuffle; the cluster-side width still scales with the
+    # scaled_shuffle; the cluster-side width still scales with the
     # session setting at real volumes)
-    with _scaled_shuffle(spark, 2):
+    with scaled_shuffle(spark, 2):
         append_stream_neardup(
             spark.readStream.schema(docs.schema).parquet(src), t, idx,
             f"{ckpt}/b1", "doc_id", "text", in_batch_threshold=None,
@@ -3993,21 +3994,6 @@ def _q_crawl_to_corpus(spark, env):
 # claim frames crossJoin; same-grain frames join on their group key;
 # same-schema result frames union with a variant tag.
 # ---------------------------------------------------------------------------
-
-
-
-
-def _scaled_shuffle(spark, n_keys, per_partition=1):
-    """Size spark.sql.shuffle.partitions from the DATA for a scoped
-    section (streaming state stores here): ceil(n_keys/per_partition)
-    clamped to [2, session width] — measured 13.3s -> 3.8s per
-    micro-batch at sf0.1 for funnel_stream's 32 -> 4 reduction. Thin
-    wrapper over the ONE locked implementation in operators/_local.py,
-    so every conf-scoped section is overlap-safe against concurrent
-    combined-row builds by construction (VERDICT r17 #4)."""
-    from iceberg_python_spark.operators._local import scaled_shuffle
-
-    return scaled_shuffle(spark, n_keys, per_partition)
 
 
 def _widen(df):
@@ -5792,6 +5778,7 @@ def _q_funnel_stream(spark, env):
     import shutil
     import tempfile
 
+    from iceberg_python_spark.operators._local import scaled_shuffle
     from iceberg_python_spark.streaming import funnel_stream
 
     ev = env["events"].scan(selected_fields=("ts", "user_id", "event_type")).to_df()
@@ -5846,13 +5833,13 @@ def _q_funnel_stream(spark, env):
             shutil.move(p, os.path.join(src, f"c{i}_{j}.parquet"))
 
     # state partitions sized from the data (~25k events per partition;
-    # see _scaled_shuffle — near-empty state stores cost more in
+    # see scaled_shuffle — near-empty state stores cost more in
     # per-batch store commits + Python round trips than they win in
     # parallelism). Since r18 the operator buckets its state by user
     # hash (one pandas exchange per bucket per micro-batch instead of
     # one per user — the per-KEY protocol was the row's 9-10s floor),
     # so the state width only sizes the store/commit count.
-    with _scaled_shuffle(spark, n_ev, 25000):
+    with scaled_shuffle(spark, n_ev, 25000):
         append(0)
         stream = spark.readStream.schema(schema).parquet(src)
         q = (
@@ -5905,6 +5892,7 @@ def _q_heavy_hitters_stream(spark, env):
     import tempfile
     import uuid as _uuid
 
+    from iceberg_python_spark.operators._local import scaled_shuffle
     from iceberg_python_spark.streaming import heavy_hitters_stream
 
     m = 16
@@ -5945,8 +5933,8 @@ def _q_heavy_hitters_stream(spark, env):
 
     # state keys = the 3 l_returnflag groups: state partitions beyond
     # the key count are guaranteed-empty stores at ANY scale, so clamp
-    # to 4 (see _scaled_shuffle)
-    with _scaled_shuffle(spark, 4):
+    # to 4 (see scaled_shuffle)
+    with scaled_shuffle(spark, 4):
         _feed(0)
         stream = spark.readStream.schema(feed_schema).parquet(src)
         q = (

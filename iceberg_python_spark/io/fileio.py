@@ -69,17 +69,6 @@ def to_local(path: str) -> str:
     raise ValueError(f"path is not local: {path}")
 
 
-def _active_spark(spark=None):
-    if spark is not None:
-        return spark
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    if s is None:
-        raise RuntimeError("no active SparkSession for remote FileIO")
-    return s
-
-
 def _spark_or_none(spark=None):
     if spark is not None:
         return spark

@@ -499,22 +499,6 @@ def embedding_neardup_pairs(
     )
 
 
-
-
-
-def _edge_scaled_shuffle(spark, n_edges: int, per_partition: int = 50000):
-    """Size the per-round shuffles of an iterative loop from the EDGE
-    COUNT: ~50k edges per partition, clamped to the session width.
-    Thin wrapper over the locked conf-scoped implementation in
-    :mod:`.._local` (guide §2 scale-adaptive partitioning). The CC
-    loops themselves now run on conf-isolated session clones
-    (:func:`.._local.isolated_scaled_session`) so they can overlap;
-    this wrapper remains for conf-scoped one-shot sections."""
-    from ._local import scaled_shuffle
-
-    return scaled_shuffle(spark, n_edges, per_partition)
-
-
 def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14,
@@ -617,19 +601,13 @@ def connected_components(
     # an expensive similarity join that must not be re-run per reference
     edges = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(eager=True)
     n_edges = edges.count()  # free: checkpointed
-    # the distributed loops run on a conf-ISOLATED session clone with
-    # edge-scaled shuffle width (~50k edges/partition, clamped to the
-    # session width): a private SQLConf instead of the locked global
-    # mutation means a loop never holds a lock for its duration, so
-    # independent CC variants built on overlapped driver threads
-    # (dedup_clusters_combined) genuinely run concurrently (guide §2.6)
-    # with identical per-round plans
-    from ._local import isolated_scaled_session, rebind
-
-    spark = edges.sparkSession
+    # the distributed loops run in the caller's session with no conf
+    # change and no lock: AQE coalescing sizes each round's reduce side
+    # from the shuffled bytes, so independent CC variants built on
+    # overlapped driver threads (dedup_clusters_combined) run
+    # concurrently without a per-loop width
     if algorithm == "star" and n_edges > driver_threshold:
-        sess = isolated_scaled_session(spark, n_edges, 50000)
-        return rebind(_cc_star(rebind(edges, sess), max_iter), spark)
+        return _cc_star(edges, max_iter)
     if n_edges <= driver_threshold:
         # small-graph fast path: near-dup edge lists are threshold-pruned
         # and usually tiny relative to the corpus, so a driver union-find
@@ -671,9 +649,7 @@ def connected_components(
     labels = sym.select(F.col("u").alias("node")).distinct().withColumn("lbl", F.col("node"))
     labels = labels.localCheckpoint(eager=True)
     sym = sym.localCheckpoint(eager=True)
-    sess = isolated_scaled_session(spark, n_edges, 50000)
-    out = _cc_hashmin_loop(rebind(sym, sess), rebind(labels, sess), max_iter)
-    return rebind(out, spark)
+    return _cc_hashmin_loop(sym, labels, max_iter)
 
 
 def _cc_hashmin_loop(sym: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:

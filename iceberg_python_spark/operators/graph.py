@@ -71,7 +71,6 @@ def pagerank(
     e = e.localCheckpoint(eager=True)  # reused: degree agg + every iteration
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     ed = e.join(outdeg, "src").localCheckpoint(eager=True)
-    n_edges = ed.count()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -79,19 +78,12 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     base = _SCALE - damping_micro
-    from ._local import isolated_scaled_session, rebind
-
-    # per-round shuffles sized from the edge count (guide §2
-    # scale-adaptive partitioning, the connected-components loop's
-    # treatment): near-dup-scale authority graphs are tiny relative to
-    # the corpus and every iteration is 2+ shuffles; billion-edge
-    # graphs keep the session width. The loop runs on a conf-ISOLATED
-    # session clone instead of a locked global-conf section, so it
-    # never serializes sibling overlapped builds (guide §2.6).
-    parent = e.sparkSession
-    sess = isolated_scaled_session(parent, n_edges, 50000)
-    ed = rebind(ed, sess)
-    nodes = rebind(nodes, sess)
+    # the loop runs in the caller's session with no conf change and no
+    # lock: each iteration is 2 shuffles, and AQE coalescing sizes
+    # their reduce side from the shuffled bytes, so near-dup-scale
+    # authority graphs run narrow while billion-edge graphs keep the
+    # session width — and overlapped sibling builds never serialize
+    # behind the loop
     pr = nodes.select("node", F.lit(_SCALE).cast("long").alias("pr_micro"))
     for _ in range(iterations):
         shares = (
@@ -113,4 +105,4 @@ def pagerank(
         # materialize each iteration: the lineage would otherwise grow
         # a 2·k-join plan and re-execute everything per action
         pr = pr.localCheckpoint(eager=True)
-    return rebind(pr, parent)
+    return pr

@@ -63,18 +63,6 @@ STUB_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def attach_media_metadata(df: DataFrame, binary_col: str, mime: str, source_uri_col: str = None) -> DataFrame:
-    """Wrap a binary column with the typed metadata struct."""
-    meta = F.struct(
-        F.lit(mime).alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-        (F.col(source_uri_col) if source_uri_col else F.lit(None).cast("string")).alias("source_uri"),
-    )
-    return df.withColumn("media_meta", meta)
-
-
 def _fake_features(payload: bytes, dim: int) -> list:
     """Deterministic pseudo-embedding from the payload digest (stub for a
     real vision/audio encoder)."""

@@ -518,11 +518,6 @@ def r6_entries(file_key: bytes, owner_pw: bytes = b"owner") -> Dict[str, bytes]:
     return {"U": u, "UE": ue, "O": o, "OE": oe}
 
 
-def derive_r234_key(o: bytes, p: int, file_id: bytes, r: int, length_bits: int) -> bytes:
-    """Empty-user-password file key (writer-side mirror of Algorithm 2)."""
-    return _r234_file_key(b"", o, p, file_id, r, length_bits, True)
-
-
 def _cbc_raw_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     w = _expand_key(key)
     nr = len(key) // 4 + 6

@@ -198,6 +198,14 @@ def curate_corpus(
         # dedup plan contains the observe node); same value the
         # dedicated count produced, one fewer materialization
         stats["after_model_quality"] = int(_mq_obs.get["n"])
+        if stats["after_model_quality"] < _n_exact:
+            # exact dedup keeps a subset of the model-gate output, so a
+            # smaller observed count means the metric did not resolve
+            # (observe() reads 0 in some plan placements)
+            raise RuntimeError(
+                f"model-gate observation read {stats['after_model_quality']} rows, "
+                f"below the {_n_exact} rows exact dedup kept from it"
+            )
     stats["after_exact_dedup"] = _n_exact
 
     neardup = minhash_dedup(exact, id_col, text_col, threshold=neardup_threshold).localCheckpoint(eager=False)

@@ -45,3 +45,36 @@ def test_pagerank_hub_and_guards(spark):
         pagerank(df, "src", "dst", iterations=0)
     with pytest.raises(ValueError, match="damping"):
         pagerank(df, "src", "dst", damping_micro=2_000_000)
+
+
+def test_pagerank_iteration_runs_two_shuffles(spark, monkeypatch):
+    """Each iteration's plan shuffles at most twice (the rank join's
+    one side and the inflow groupBy): the out-degree is pre-joined
+    once, and the loop runs in the caller's session with no
+    repartition of its own."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    # built from range so the planner knows the input sizes, as it does
+    # for table scans (a parallelized list plans every join as a shuffle)
+    edges = [(i, (i * 7 + 3) % 50) for i in range(200)]
+    df = spark.range(200).select(
+        F.col("id").alias("src"), ((F.col("id") * 7 + 3) % 50).alias("dst")
+    )
+    plans = []
+    frame_cls = type(df)
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *a, **kw):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    got = {r["node"]: r["pr_micro"] for r in pagerank(df, "src", "dst", iterations=3).collect()}
+    assert got == _ref_pagerank(edges, iterations=3)
+    # three setup checkpoints (edges, edges + degree, nodes), then one
+    # per iteration
+    assert len(plans) == 6, len(plans)
+    shuffles = [len(re.findall(r"(?<!Broadcast)Exchange \w", p)) for p in plans[3:]]
+    assert all(1 <= n <= 2 for n in shuffles), (shuffles, plans[-1])

@@ -1367,6 +1367,55 @@ def test_curate_corpus_optional_stages(spark):
     assert st5["after_model_quality"] >= st5["after_exact_dedup"] >= st5["after_neardup"]
 
 
+def _model_gate_corpus(spark):
+    rows = [
+        (i, "srcA" if i % 2 else "srcB", "the cat and dog is of note here "
+         + " ".join(f"word{i}x{j}" for j in range(40 + i % 7)))
+        for i in range(30)
+    ]
+    rows.append((100, "srcA", rows[0][2]))  # exact duplicate
+    return spark.createDataFrame(rows, "doc_id: long, source: string, text: string")
+
+
+def test_curate_model_gate_count_matches_separate_count(spark):
+    """With the model gate on, ``after_model_quality`` rides the dedup
+    stage's materialization as an observe() metric; it must equal a
+    separate count of the gate's output (the decile-binned survivors
+    of the rule gate at or under the kept decile)."""
+    from pyspark.sql import functions as F
+
+    from iceberg_python_spark.pipeline import curate_corpus
+
+    res = curate_corpus(
+        _model_gate_corpus(spark), quality_top_deciles=5, train_token_budget=2000, seq_len=128
+    )
+    st = res["stats"]
+    separate = res["quality_bins"].where(F.col("bucket") <= 5).count()
+    assert st["after_model_quality"] == separate
+    assert 0 < separate < st["after_quality"]
+    assert st["after_model_quality"] >= st["after_exact_dedup"]
+
+
+def test_curate_model_gate_zero_observation_raises(spark, monkeypatch):
+    """An observe() metric that reads 0 over a non-empty gate output
+    must fail loudly, not report an empty stage."""
+    import pyspark.sql
+    from pyspark.sql import Observation
+
+    from iceberg_python_spark.pipeline import curate_corpus
+
+    class ZeroObservation(Observation):
+        @property
+        def get(self):
+            return {"n": 0}
+
+    monkeypatch.setattr(pyspark.sql, "Observation", ZeroObservation)
+    with pytest.raises(RuntimeError, match="model-gate observation read 0 rows"):
+        curate_corpus(
+            _model_gate_corpus(spark), quality_top_deciles=5, train_token_budget=2000, seq_len=128
+        )
+
+
 def test_dsir_importance_weights(spark):
     """DSIR sanity: raw docs resembling the target score higher than
     dissimilar docs; weights are finite; n_grams = 2*len-1."""
@@ -2309,58 +2358,32 @@ def test_dedup_blocks_release_with_frames(spark):
     assert grown <= 1, f"stored RDDs grew by {grown} across 3 dedup runs"
 
 
-def test_isolated_scaled_session_private_conf(spark):
-    """r18: iterative loops (CC, pagerank) size their per-round
-    shuffles on a conf-ISOLATED session clone — the scaled width must
-    land on the clone only, derive exactly like scaled_shuffle, and
-    never touch the parent session's conf (lock-free overlap safety)."""
-    from iceberg_python_spark.operators._local import (
-        isolated_scaled_session,
-        scaled_width,
-    )
+def test_scaled_shuffle_clamps_to_session_width(spark):
+    """scaled_shuffle sizes the conf from the data inside its section:
+    ceil(n_keys / per_partition), a huge key count clamps to the
+    session width, a tiny one floors at 2, and the width is restored
+    on exit."""
+    from iceberg_python_spark.operators._local import scaled_shuffle
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    sess = isolated_scaled_session(spark, 100_000, 50_000)
-    assert sess is not spark
-    assert int(sess.conf.get("spark.sql.shuffle.partitions")) == scaled_width(
-        int(before), 100_000, 50_000
-    ) == 2
-    # huge key count clamps to the parent width, tiny floors at 2
-    assert scaled_width(int(before), 10**9, 1) == int(before)
-    assert scaled_width(int(before), 1, 50_000) == 2
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_rebind_cross_session_roundtrip(spark):
-    """r18: rebind() hands a checkpointed frame to a session clone and
-    back via a transient global temp view; values are identical, the
-    view does not linger, and a frame already in the target session is
-    returned as-is."""
-    from pyspark.sql import functions as F
-
-    from iceberg_python_spark.operators._local import rebind
-
-    df = (
-        spark.range(100)
-        .withColumn("v", F.col("id") % 7)
-        .localCheckpoint(eager=True)
-    )
-    clone = spark.newSession()
-    over = rebind(df, clone)
-    agg = over.groupBy("v").count().localCheckpoint(eager=True)
-    back = rebind(agg, spark)
-    want = sorted((r.v, r["count"]) for r in df.groupBy("v").count().collect())
-    assert sorted((r.v, r["count"]) for r in back.collect()) == want
-    assert rebind(df, spark) is df
-    # transient views are dropped before rebind returns
-    assert [t.name for t in spark.catalog.listTables("global_temp") if t.name.startswith("_rebind_")] == []
+    width = int(before)
+    for n_keys, per, want in (
+        (10**9, 1, width),
+        (1, 50_000, 2),
+        (100_000, 50_000, 2),
+        (3 * 50_000, 50_000, min(3, width)),
+    ):
+        with scaled_shuffle(spark, n_keys, per) as parts:
+            assert parts == want
+            assert int(spark.conf.get("spark.sql.shuffle.partitions")) == want
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_connected_components_overlapped_loops(spark):
-    """r18: distributed CC loops run on isolated session clones, so
-    concurrent variants (the dedup_clusters_combined shape) must not
-    perturb each other or the parent conf, and must agree with the
-    driver union-find path."""
+    """Distributed CC loops run in the caller's session with no conf
+    change, so concurrent variants (the dedup_clusters_combined shape)
+    must not perturb each other or the session conf, and must agree
+    with the driver union-find path."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -2395,35 +2418,32 @@ def test_connected_components_overlapped_loops(spark):
 
 
 def test_edge_scaled_shuffle_concurrent_restore(spark):
-    """r17/r18: every scaled-shuffle section mutates the session-global
-    shuffle partition conf through ONE locked implementation
+    """Every scaled-shuffle section mutates the session-global shuffle
+    partition conf through ONE locked implementation
     (operators/_local.scaled_shuffle); with combined rows building
     sub-frames on threads AND streaming rows sizing their state stores
-    through the same helper, interleaved set/restore must never leak a
-    scaled value into the session. Hammers the dedup wrapper, the
-    entry wrapper, and the shared helper concurrently."""
+    through it, interleaved set/restore must never leak a scaled value
+    into the session. Hammers the helper from concurrent threads."""
     import threading
 
-    import __spark_entry__ as entry
     from iceberg_python_spark.operators._local import scaled_shuffle
-    from iceberg_python_spark.operators.dedup import _edge_scaled_shuffle
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     errs = []
 
-    def run(ctx_fn, n):
+    def run(n):
         try:
-            with ctx_fn(spark, n):
+            with scaled_shuffle(spark, n) as parts:
                 # inside the section the conf is the scaled value and
                 # stays stable against sibling threads (the lock holds)
-                assert int(spark.conf.get("spark.sql.shuffle.partitions")) <= max(2, int(before))
+                assert int(spark.conf.get("spark.sql.shuffle.partitions")) == parts <= max(2, int(before))
         except Exception as e:  # pragma: no cover
             errs.append(e)
 
     threads = [
-        threading.Thread(target=run, args=(fn, n))
+        threading.Thread(target=run, args=(n,))
         for n in (10, 100_000, 10_000_000)
-        for fn in (_edge_scaled_shuffle, entry._scaled_shuffle, scaled_shuffle)
+        for _ in range(3)
     ]
     for t in threads:
         t.start()
