@@ -3991,8 +3991,8 @@ def _q_crawl_to_corpus(spark, env):
 # rows — ONE window slot each, every constituent still executing its
 # FULL pipeline and keeping every value/claim column under a per-family
 # prefix (the text_perdoc_combined / meta_combined pattern). One-row
-# claim frames crossJoin; same-grain frames join on their group key;
-# same-schema result frames union with a variant tag.
+# claim frames compose through _combine; same-grain frames join on
+# their group key; same-schema result frames union with a variant tag.
 # ---------------------------------------------------------------------------
 
 
@@ -4051,74 +4051,69 @@ def _overlap(*thunks):
         return [f.result() for f in futs]
 
 
+def _combine(spark, claims, grain=None):
+    """Compose a combined row from one-row claim frames. ``claims`` maps
+    a column prefix to a thunk building one claim frame; ``grain`` is
+    an optional thunk building the row's multi-row frame (it pins
+    itself). All thunks run in one _overlap. Each claim frame is
+    collected inside its own thread, while the intermediates it reads
+    are still hot, and must hold exactly one row. Its columns are then
+    appended to the grain frame, or to range(1), as literals cast to
+    the claim frame's own types under its prefix. The final plan reads
+    no claim subtree: no join, no broadcast exchange, no claim job left
+    to the final action."""
+
+    def collect(prefix, build):
+        def thunk():
+            df = build()
+            rows = df.collect()
+            if len(rows) != 1:
+                raise ValueError(f"claim frame {prefix!r} has {len(rows)} rows, expected 1")
+            return df.schema, rows[0]
+
+        return thunk
+
+    built = _overlap(*(collect(p, b) for p, b in claims.items()), *([grain] if grain else []))
+    cols = [
+        F.lit(v).cast(fld.dataType).alias(f"{p}{fld.name}")
+        for p, (schema, row) in zip(claims, built)
+        for fld, v in zip(schema.fields, row)
+    ]
+    if grain is None:
+        return spark.range(1).select(*cols)
+    return built[-1].select("*", *cols)
+
+
 def _q_dedup_invariants_combined(spark, env):
     # minhash + simhash + jaccard + semantic + bloom-decontamination
-    # invariants (5 former rows, 4 of them age-3) in one slot. The five
-    # sub-builds are independent and each runs its own checkpoint jobs
-    # at construction time — build them on overlapped driver threads
-    # (guide §2.6) so those jobs back-fill each other's task tails; the
-    # crossJoin composition (and therefore the result) is unchanged.
-    # Each one-row claim frame is pinned eagerly INSIDE its thunk: the
-    # sub-builds' claim aggregates read .persist()ed intermediates
-    # (minhash survivors, LSH buckets) that five concurrent builds can
-    # evict, so leaving the claims lazy let the final action silently
-    # recompute the whole LSH pipeline (measured: 0.9-2.2s final job
-    # flipping to 16-28s). Pinning moves all claim work into the
-    # overlapped phase while its caches are hot; the final action is a
-    # crossJoin of five one-row checkpoints.
-    subs = _overlap(
-        lambda: _q_dedup_minhash_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_dedup_simhash_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_dedup_jaccard_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_semantic_dedup_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_bloom_decontam_invariants(spark, env).localCheckpoint(eager=True),
+    # invariants (5 former rows) in one slot
+    return _combine(
+        spark,
+        {
+            "mh_": lambda: _q_dedup_minhash_invariants(spark, env),
+            "sh_": lambda: _q_dedup_simhash_invariants(spark, env),
+            "jc_": lambda: _q_dedup_jaccard_invariants(spark, env),
+            "sem_": lambda: _q_semantic_dedup_invariants(spark, env),
+            "bl_": lambda: _q_bloom_decontam_invariants(spark, env),
+        },
     )
-    out = _prefixed(subs[0], "mh_")
-    for sub, p in zip(subs[1:], ("sh_", "jc_", "sem_", "bl_")):
-        out = out.crossJoin(F.broadcast(_prefixed(sub, p)))
-    return out
 
 
 def _q_multimodal_decode_combined(spark, env):
     # jpeg + gif + webp + tiff + flac + video-frame codec rows (6
     # former rows) in one slot — every decoder still decodes its full
-    # synthesized corpus; the one-row claim frames crossJoin. Each
-    # sub-build runs its synth+fidelity mapInPandas pass eagerly at
-    # construction; overlapping the six builds on driver threads
-    # (guide §2.6) back-fills codec-job tails — composition unchanged.
-    # Each sub's ONE-ROW claim aggregate is evaluated inside its own
-    # overlap thread (first()) and the combined row is rebuilt as JVM
-    # literals over range(1) — the _claims shape. The old
-    # crossJoin(broadcast(...)) composition deferred all six aggregates
-    # to the final action, where the five broadcast builds materialized
-    # SEQUENTIALLY on the driver (~2.6s of serial claim jobs measured;
-    # guide §2.6 — the threads were already there, the finale wasn't
-    # using them). Values and schema are identical: same aggregates,
-    # same rows, literal-cast to each sub's exact column types.
-    # (r17 note kept for contrast: checkpoint-PINNING the claim frames
-    # lost — that added 6 jobs; this evaluates the same job in-thread.)
-    def _pinned(build):
-        def thunk():
-            df = build(spark, env)
-            return df.schema, df.first()
-
-        return thunk
-
-    subs = _overlap(
-        _pinned(_q_multimodal_jpeg_decode),
-        _pinned(_q_multimodal_gif_decode),
-        _pinned(_q_multimodal_webp_decode),
-        _pinned(_q_multimodal_tiff_decode),
-        _pinned(_q_multimodal_flac_decode),
-        _pinned(_q_multimodal_video_frames),
+    # synthesized corpus
+    return _combine(
+        spark,
+        {
+            "jpeg_": lambda: _q_multimodal_jpeg_decode(spark, env),
+            "gif_": lambda: _q_multimodal_gif_decode(spark, env),
+            "webp_": lambda: _q_multimodal_webp_decode(spark, env),
+            "tiff_": lambda: _q_multimodal_tiff_decode(spark, env),
+            "flac_": lambda: _q_multimodal_flac_decode(spark, env),
+            "video_": lambda: _q_multimodal_video_frames(spark, env),
+        },
     )
-    cols = []
-    for (schema, row), p in zip(
-        subs, ("jpeg_", "gif_", "webp_", "tiff_", "flac_", "video_")
-    ):
-        for fld, v in zip(schema.fields, row):
-            cols.append(F.lit(v).cast(fld.dataType).alias(f"{p}{fld.name}"))
-    return spark.range(1).select(*cols)
 
 
 def _q_ann_recall_combined(spark, env):
@@ -4137,10 +4132,9 @@ def _q_ann_recall_combined(spark, env):
     emb = env["embeddings"].scan().to_df()
     q = emb.where("vec_id < 5").select(F.col("vec_id").alias("query_id"), "embedding")
     # the four index builds (exact brute-force + LSH + IVF + PQ) are
-    # mutually independent — only the lazy _recall_invariant
-    # comparisons reference `exact` — so their construction-time jobs
-    # (three eager checkpoints; IVF's k-means fit) overlap on driver
-    # threads (guide §2.6); the comparisons compose exactly as before
+    # mutually independent, so their construction-time jobs (three
+    # eager checkpoints; IVF's k-means fit) overlap on driver threads
+    # (guide §2.6); the three recall claims then overlap in _combine
     exact, lsh_full, ivf_full, pq_top = _overlap(
         lambda: brute_force_cosine_topk(emb, q, "vec_id", "embedding", k=10)
         .select("query_id", "vec_id")
@@ -4155,17 +4149,18 @@ def _q_ann_recall_combined(spark, env):
             "query_id", "vec_id"
         ),
     )
-    lsh = _recall_invariant(
-        exact, lsh_full.select("query_id", "vec_id"), 0.25, approx_full=lsh_full, k=10
+    return _combine(
+        spark,
+        {
+            "lsh_": lambda: _recall_invariant(
+                exact, lsh_full.select("query_id", "vec_id"), 0.25, approx_full=lsh_full, k=10
+            ),
+            "ivf_": lambda: _recall_invariant(
+                exact, ivf_full.select("query_id", "vec_id"), 0.5, approx_full=ivf_full, k=10
+            ),
+            "pq_": lambda: _recall_invariant(exact, pq_top, 0.5),
+        },
     )
-    ivf = _recall_invariant(
-        exact, ivf_full.select("query_id", "vec_id"), 0.5, approx_full=ivf_full, k=10
-    )
-    pq = _recall_invariant(exact, pq_top, 0.5)
-    out = _prefixed(lsh, "lsh_")
-    for sub, p in ((ivf, "ivf_"), (pq, "pq_")):
-        out = out.crossJoin(F.broadcast(_prefixed(sub, p)))
-    return out
 
 
 def _q_events_asof_combined(spark, env):
@@ -4187,36 +4182,25 @@ def _q_events_asof_combined(spark, env):
 
 def _q_sketch_invariants_combined(spark, env):
     # HLL + theta (per-source) join on source; t-digest + Misra-Gries
-    # (per-returnflag) join on flag; cms (one row) crossJoins — 5
-    # former rows, every estimator claim kept, one slot
-    # the five estimator sub-builds are independent; overlap their
-    # construction-time jobs (guide §2.6) — composition unchanged.
-    # Each small sub-frame (per-source/per-flag/one-row) is pinned
-    # eagerly INSIDE its thunk: the sub-builds checkpoint their sketch
-    # tables but return lazy claim frames, so the exact-count scans and
-    # merge builds otherwise run serially in the combined row's final
-    # action instead of inside the overlapped phase.
-    subs = _overlap(
-        lambda: _q_hll_sketch_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_theta_sketch_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_tdigest_quantile_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_mg_heavy_hitters_invariants(spark, env).localCheckpoint(eager=True),
-        lambda: _q_cms_heavy_hitters(spark, env).localCheckpoint(eager=True),
-    )
-    hll = _prefixed(subs[0], "hll_", keep=("source",))
-    theta = _prefixed(subs[1], "theta_", keep=("source",))
-    td = _prefixed(
-        subs[2].withColumnRenamed("l_returnflag", "flag"),
-        "td_",
-        keep=("flag",),
-    )
-    mg = _prefixed(subs[3], "mg_", keep=("flag",))
-    cms = _prefixed(subs[4], "cms_")
-    return (
-        hll.join(theta, "source")
-        .crossJoin(td.join(mg, "flag"))
-        .crossJoin(F.broadcast(cms))
-    )
+    # (per-returnflag) join on flag; the cms claims ride as literals —
+    # 5 former rows, every estimator claim kept, one slot
+    def grain():
+        hll, theta, td, mg = _overlap(
+            lambda: _q_hll_sketch_invariants(spark, env).localCheckpoint(eager=True),
+            lambda: _q_theta_sketch_invariants(spark, env).localCheckpoint(eager=True),
+            lambda: _q_tdigest_quantile_invariants(spark, env).localCheckpoint(eager=True),
+            lambda: _q_mg_heavy_hitters_invariants(spark, env).localCheckpoint(eager=True),
+        )
+        td = td.withColumnRenamed("l_returnflag", "flag")
+        return (
+            _prefixed(hll, "hll_", keep=("source",))
+            .join(_prefixed(theta, "theta_", keep=("source",)), "source")
+            .crossJoin(
+                _prefixed(td, "td_", keep=("flag",)).join(_prefixed(mg, "mg_", keep=("flag",)), "flag")
+            )
+        )
+
+    return _combine(spark, {"cms_": lambda: _q_cms_heavy_hitters(spark, env)}, grain=grain)
 
 
 def _q_spark_datasource_rt(spark, env):
@@ -4274,11 +4258,6 @@ def _q_dedup_clusters_combined(spark, env):
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    # the three variants are independent reads of the ONE checkpointed
-    # pair set; each distributed loop runs on its own conf-isolated
-    # session clone (no global-conf lock to hold), so building them on
-    # overlapped driver threads (guide §2.6) backfills one loop's
-    # per-round job tails with the others' — composition unchanged
     base_cc, dflt_cc, star_cc = _overlap(
         lambda: connected_components(pairs, driver_threshold=0),
         lambda: connected_components(pairs),
@@ -4298,31 +4277,24 @@ def _q_dedup_clusters_combined(spark, env):
 
 def _q_quality_classifier_combined(spark, env):
     # per-doc classifier scores (value-hashed) + the training
-    # invariants claims (one row, prefixed) — 2 former rows. The
-    # scoring pass is pinned eagerly on a second driver thread so it
-    # overlaps the invariants half's 12 sequential gradient-pass jobs
-    # (guide §2.6); the returned composition is unchanged (the final
-    # action reads the checkpointed score blocks instead of recomputing
-    # the scan+score subtree it already ran).
-    scores, inv = _overlap(
-        lambda: _q_quality_classifier_score(spark, env).localCheckpoint(eager=True),
-        lambda: _prefixed(_q_quality_classifier_invariants(spark, env), "train_"),
+    # invariants claims (prefixed train_) — 2 former rows
+    return _combine(
+        spark,
+        {"train_": lambda: _q_quality_classifier_invariants(spark, env)},
+        grain=lambda: _q_quality_classifier_score(spark, env).localCheckpoint(eager=True),
     )
-    return scores.crossJoin(F.broadcast(inv))
 
 
 def _q_pipeline_invariants_combined(spark, env):
-    # incremental-curation + full-curation pipeline claims (both
-    # one-row frames) — 2 former rows. Each half is a full curate run
-    # whose ~10 sequential stage jobs execute at construction time over
-    # small frames; overlapping the two halves on driver threads
-    # (guide §2.6) back-fills one half's stage-job latency with the
-    # other's — composition and claims unchanged.
-    a, b = _overlap(
-        lambda: _prefixed(_q_pipeline_incremental_invariants(spark, env), "inc_"),
-        lambda: _prefixed(_q_pipeline_curation_invariants(spark, env), "cur_"),
+    # incremental-curation + full-curation pipeline claims — 2 former
+    # rows, each a full curate run
+    return _combine(
+        spark,
+        {
+            "inc_": lambda: _q_pipeline_incremental_invariants(spark, env),
+            "cur_": lambda: _q_pipeline_curation_invariants(spark, env),
+        },
     )
-    return a.crossJoin(F.broadcast(b))
 
 
 def _q_agg_multidim_combined(spark, env):

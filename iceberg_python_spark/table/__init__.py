@@ -3638,18 +3638,19 @@ class DataScan:
         """Metadata fast path: sum record_count where the residual is
         AlwaysTrue; read only files that still need the filter
         (reference table/__init__.py:2341-2366)."""
+        metadata = self.table.metadata
+        plan = self._plan_inputs(metadata)
         total = 0
         to_read: List[FileScanTask] = []
-        for t in self.plan_files():
+        for t in self.plan_files(metadata, plan=plan):
             if isinstance(t.residual, AlwaysTrue) and not t.delete_files and not t.eq_delete_files:
                 total += t.data_file["record_count"]
             else:
                 to_read.append(t)
         if to_read:
-            metadata = self.table.metadata
-            schema = self._scan_schema(metadata, self._snapshot(metadata))
-            bound = bind(self.row_filter, schema, self.case_sensitive)
-            total += _read_tasks(self.table.spark, metadata, schema, to_read, row_filter=bound).count()
+            total += _read_tasks(
+                self.table.spark, metadata, plan.schema, to_read, row_filter=plan.bound
+            ).count()
         if self.limit is not None:
             total = min(total, self.limit)
         return total

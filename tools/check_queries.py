@@ -1,10 +1,13 @@
-"""Side-by-side Spark-vs-DuckDB check of selected queries() entries,
-mimicking the driver's correctness gate (rows + schema + value hash on
-name-sorted columns). Usage:
+"""Side-by-side Spark-vs-DuckDB check of ``__spark_entry__`` queries with
+the driver's correctness semantics: equal row count, equal column names,
+and equal SHA-256 over every cell's ``str()`` with columns sorted by
+name and rows sorted. Row and column order do not matter; any changed
+cell does (there is no float tolerance). Prints one line per query with
+the seconds it took. Usage:
 
     python tools/check_queries.py [sf_dir] [query ...]
 
-No args = every oracled query.
+No query names = every oracled query. Exits 1 if any query fails.
 """
 
 from __future__ import annotations
@@ -12,6 +15,9 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
+
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings")
 
 
 def _hash_df(pdf) -> str:
@@ -22,6 +28,15 @@ def _hash_df(pdf) -> str:
         h.update("\x1f".join(r).encode())
         h.update(b"\x1e")
     return h.hexdigest()
+
+
+def compare(sdf, odf) -> tuple[bool, bool, bool]:
+    """(rows match, column names match, value hash matches) of two
+    pandas frames; the hash is only compared when rows and names match."""
+    ok_rows = len(sdf) == len(odf)
+    ok_cols = sorted(sdf.columns) == sorted(odf.columns)
+    ok_hash = ok_rows and ok_cols and _hash_df(sdf) == _hash_df(odf)
+    return ok_rows, ok_cols, ok_hash
 
 
 def main() -> None:
@@ -41,7 +56,7 @@ def main() -> None:
     import __spark_entry__ as entry
 
     con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"):
+    for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
@@ -50,20 +65,25 @@ def main() -> None:
     oracles = entry.oracle_sql()
     names = sys.argv[2:] or [n for n in qs if n in oracles]
     failed = []
+    t0 = time.time()
     for name in names:
         try:
+            t1 = time.time()
             sdf = qs[name](spark, sf_dir).toPandas()
+            dt = time.time() - t1
             odf = con.execute(oracles[name]).df()
-            ok_rows = len(sdf) == len(odf)
-            ok_cols = sorted(sdf.columns) == sorted(odf.columns)
-            ok_hash = ok_rows and ok_cols and _hash_df(sdf) == _hash_df(odf)
-            status = "PASS" if (ok_rows and ok_cols and ok_hash) else "FAIL"
-            print(f"{status} {name}: spark={len(sdf)} oracle={len(odf)} cols={ok_cols} hash={ok_hash}")
+            ok_rows, ok_cols, ok_hash = compare(sdf, odf)
+            status = "PASS" if ok_hash else "FAIL"
+            print(
+                f"{status} {name} {dt:.1f}s: spark={len(sdf)} oracle={len(odf)} cols={ok_cols} hash={ok_hash}",
+                flush=True,
+            )
             if status == "FAIL":
                 failed.append(name)
         except Exception as e:
-            print(f"ERROR {name}: {type(e).__name__}: {str(e)[:300]}")
+            print(f"ERROR {name}: {type(e).__name__}: {str(e)[:300]}", flush=True)
             failed.append(name)
+    print(f"{len(names)} queries, {len(failed)} failing, total {time.time() - t0:.0f}s")
     print("FAILED:", failed if failed else "none")
     sys.exit(1 if failed else 0)
 

@@ -1,6 +1,9 @@
 """Profile declared queries in isolation (guide §1): time each named
 query via the noop sink on an idle session and write its
-.explain("formatted") to plans/r18/<name>_<tag>.txt.
+.explain("formatted") to plans/r<round>/<name>_<tag>.txt, where the
+round is the one after the latest committed CORRECTNESS_r*.json (see
+rotation_state.py), so a re-run never overwrites an earlier round's
+plans.
 
 Usage:
   python tools/profile_hot.py [--tag before|after] [--reps N] [--no-plans] name [name ...]
@@ -54,8 +57,10 @@ def main() -> None:
     entry._wh(spark, sf_dir)
     print(f"# load {time.time() - t0:.1f}s", file=sys.stderr)
 
+    from rotation_state import correctness_history
+
     qs = entry.queries()
-    plans_dir = os.path.join(root, "plans", "r18")
+    plans_dir = os.path.join(root, "plans", f"r{max(correctness_history()) + 1}")
     os.makedirs(plans_dir, exist_ok=True)
 
     out: dict = {}
