@@ -300,10 +300,10 @@ def _wh(spark: SparkSession, sf_dir: str) -> dict:
         env["docs_inc"] = cat.load_table("db.docs_inc")
 
     def build_mor_stream():
-        # MoR streamed distributed read (r10): position deletes must
-        # apply executor-side on the path-manifest scan (threshold=0
-        # forces the streamed path; write.delete.mode=merge-on-read
-        # makes the delete land as position-delete files)
+        # MoR read through the distributed planner: threshold=0 forces
+        # the manifest-pruning Spark job; write.delete.mode=merge-on-read
+        # makes the delete land as position-delete files, which
+        # _read_tasks applies to the planned tasks
         t = cat.clone_table(
             "db.lineitem",
             "db.lineitem_morstream",
@@ -316,9 +316,9 @@ def _wh(spark: SparkSession, sf_dir: str) -> dict:
         env["lineitem_morstream"] = cat.load_table("db.lineitem_morstream")
 
     def build_stream_read():
-        # streaming distributed read (r09): a clone whose threshold forces
-        # the path-manifest scan on every to_df() — the driver never
-        # materializes the file list (see SCALE.md / test_distributed_read)
+        # a clone whose threshold forces the distributed planner (the
+        # manifest-pruning Spark job) on every to_df() (see
+        # test_distributed_read)
         env["lineitem_streamread"] = cat.clone_table(
             "db.lineitem",
             "db.lineitem_streamread",
@@ -2566,40 +2566,37 @@ def _q_pipeline_incremental_invariants(spark, env):
 
 
 def _q_scan_distributed_read(spark, env):
-    # The r09 headline feature under the driver's oracle: a scan forced
-    # (threshold=0 table property) through the streaming distributed
-    # path — pruning job writes a transient path manifest, the read
-    # goes through the planned-manifest DataSource, the driver never
-    # materializes the file list — must produce EXACTLY the rows of
-    # the plain SQL. Partition pruning (month(l_shipdate)) and metrics
-    # pruning both engage before the manifest is written.
-    scan = env["lineitem_streamread"].scan(
+    # A scan forced (threshold=0 table property) through the
+    # distributed planner — manifest pruning as a Spark job, the
+    # surviving tasks read by _read_tasks — must produce EXACTLY the
+    # rows of the plain SQL. Partition pruning (month(l_shipdate)) and
+    # metrics pruning both engage in the pruning job.
+    t = env["lineitem_streamread"]
+    scan = t.scan(
         row_filter="l_shipdate >= '1996-01-01' and l_quantity > 30",
         selected_fields=("l_orderkey", "l_partkey", "l_quantity", "l_shipdate"),
     )
-    df = scan.to_df()
-    info = getattr(scan, "_streaming_plan_info", None)
-    if info is None:
-        raise AssertionError("scan fell back to the task-list path; the row must pin the streamed path")
-    return df
+    if not scan._plan_inputs(t.metadata).distributed:
+        raise AssertionError("scan planned on the driver; the row must pin the distributed planner")
+    return scan.to_df()
 
 
 def _q_scan_distributed_mor(spark, env):
-    # r10: the MoR variant of the streamed distributed read — the
-    # delete-file index is built driver-side (O(delete files)), the
-    # path manifest carries per-file sequence numbers, the planned
-    # reader synthesizes (_ips_file, _ips_pos, _ips_seq), and the
-    # position deletes anti-join executor-side. Must produce EXACTLY
-    # the plain-SQL rows minus the deleted predicate.
-    scan = env["lineitem_morstream"].scan(
+    # The MoR variant: the distributed planner attaches the position
+    # deletes (delete index built driver-side, O(delete files)) to the
+    # surviving tasks, and _read_tasks applies them. Must produce
+    # EXACTLY the plain-SQL rows minus the deleted predicate.
+    t = env["lineitem_morstream"]
+    scan = t.scan(
         row_filter="l_shipdate >= '1996-01-01'",
         selected_fields=("l_orderkey", "l_quantity", "l_shipdate"),
     )
-    df = scan.to_df()
-    info = getattr(scan, "_streaming_plan_info", None)
-    if info is None or not info.get("n_pos_deletes"):
-        raise AssertionError("MoR scan must stream with a non-empty delete index")
-    return df
+    plan = scan._plan_inputs(t.metadata)
+    if not plan.distributed:
+        raise AssertionError("MoR scan planned on the driver; the row must pin the distributed planner")
+    if not any(task.delete_files for task in scan.plan_files(t.metadata, plan=plan)):
+        raise AssertionError("MoR scan must plan tasks that carry position deletes")
+    return scan.to_df()
 
 
 def _q_multimodal_image_decode(spark, env):
@@ -4041,13 +4038,16 @@ def _overlap(*thunks):
     wall-clock of building it. Each thunk is a pure DataFrame builder
     over immutable inputs (env table scans), so concurrent construction
     computes byte-identical frames; exceptions propagate unchanged via
-    Future.result()."""
+    Future.result(). Each thread inherits the active session's local
+    properties (job group, description) and job tags."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
 
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futs = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futs]
 
 
@@ -4541,7 +4541,7 @@ def _q_mixture_combined(spark, env):
 
 
 def _q_scan_distributed_combined(spark, env):
-    # plain + MoR streamed distributed reads (2 former rows) — union
+    # plain + MoR distributed-planner reads (2 former rows) — union
     # with a variant tag (l_partkey NULL-padded on the MoR side)
     r = _q_scan_distributed_read(spark, env).select(
         F.lit("plain").alias("variant"), "l_orderkey", "l_partkey", "l_quantity", "l_shipdate"

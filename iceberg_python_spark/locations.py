@@ -44,7 +44,7 @@ WRITE_METADATA_PATH = "write.metadata.path"
 def metadata_base_path(table_location: str, properties: Optional[Dict[str, str]] = None) -> str:
     """Base dir for NEW engine-owned metadata files (reference
     locations.py:56 honors ``write.metadata.path`` the same way):
-    metadata JSON, manifests, statistics files and scan plans all land
+    metadata JSON, manifests and statistics files all land
     here. Existing files keep working after a property change — every
     recorded metadata path is absolute, so the override only redirects
     new writes. The filesystem-catalog ``version-hint.text`` FILE stays

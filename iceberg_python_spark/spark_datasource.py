@@ -240,14 +240,9 @@ def _appended_files_between(meta, from_id: Optional[int], to_id: Optional[int]) 
     return paths
 
 
-def _arrow_batches_for_file(
-    path: str, field_names: Sequence[str], target: Optional[Any] = None
-) -> Iterator[Any]:
+def _arrow_batches_for_file(path: str, field_names: Sequence[str]) -> Iterator[Any]:
     """Read one parquet file with pyarrow, projected+reordered to the
-    table schema by name (absent columns filled with nulls). ``target``
-    (a pyarrow schema over exactly ``field_names``) types the null fill
-    and casts mismatched physical types — needed when the file set
-    spans added-column schema evolution."""
+    table schema by name (absent columns filled with nulls)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -266,14 +261,7 @@ def _arrow_batches_for_file(
     cols = []
     n = table.num_rows
     for name in field_names:
-        t = target.field(name).type if target is not None else None
-        if name in table.column_names:
-            col = table.column(name)
-            if t is not None and col.type != t:
-                col = col.cast(t)
-            cols.append(col)
-        else:
-            cols.append(pa.nulls(n, type=t) if t is not None else pa.nulls(n))
+        cols.append(table.column(name) if name in table.column_names else pa.nulls(n))
     out = pa.table(dict(zip(field_names, cols)))
     yield from out.to_batches(max_chunksize=1 << 16)
 
@@ -318,119 +306,6 @@ class IcebergBatchReader(DataSourceReader):
         if not partition.path:
             return iter(())
         return _arrow_batches_for_file(partition.path, self._field_names)
-
-
-class _ManifestChunkPartition(InputPartition):
-    """A slice of ONE path-manifest part file: rows [offset, offset+count).
-    The partition handle carries the manifest part path, never the data
-    file paths themselves — the driver's memory stays O(task count)."""
-
-    def __init__(self, manifest_part: str, offset: int, count: int):
-        self.manifest_part = manifest_part
-        self.offset = offset
-        self.count = count
-
-
-class IcebergPlannedReader(DataSourceReader):
-    """Executor-side read of a PRE-PLANNED file set: ``path_manifest_dir``
-    points at a parquet directory (written by the engine's distributed
-    planner as a Spark job) whose rows carry ``file_path``. The driver
-    reads ONLY the part-file footers (row counts, O(part files)) to cut
-    chunk handles; each executor task opens its manifest slice and
-    streams the listed data files as Arrow batches. This is how a scan
-    over 10^7 surviving files avoids materializing the path list on the
-    driver — the known limit of the collect-based distributed planner
-    (SCALE.md r08).
-
-    ``lineage=true`` (the streamed MoR mode): the trailing
-    ``_ips_file`` / ``_ips_pos`` / ``_ips_seq`` fields of
-    ``schema_json`` are SYNTHESIZED per batch — the file's plan path,
-    the physical row position (running index over the file's batches,
-    exact because the file is read fully and in order), and the file's
-    data sequence number carried in the path manifest. The engine
-    anti-joins position/equality deletes against these after the scan —
-    deletes stream executor-side too, never through the driver."""
-
-    LINEAGE_FIELDS = ("_ips_file", "_ips_pos", "_ips_seq")
-
-    def __init__(self, options: Dict[str, str]):
-        self.options = dict(options)
-        self._dir = self.options["path_manifest_dir"]
-        self._lineage = str(self.options.get("lineage", "false")).lower() == "true"
-        all_fields = [f["name"] for f in json.loads(self.options["schema_json"])["fields"]]
-        self._fields = [f for f in all_fields if f not in self.LINEAGE_FIELDS]
-        self._files_per_task = max(1, int(self.options.get("files_per_task", "1")))
-
-    @staticmethod
-    def _open_manifest(path: str):
-        """Seekable handle on a manifest part: remote goes through the
-        pyarrow FileSystem (range reads — the footer probe must not
-        download the file), local by path."""
-        from .io import fileio
-
-        if fileio.is_remote(path):
-            fs, rel = fileio._pa_fs(path)
-            return fs.open_input_file(rel)
-        return fileio.to_local(path)
-
-    def partitions(self) -> List[InputPartition]:
-        import pyarrow.parquet as pq
-
-        from .io import fileio
-
-        parts: List[InputPartition] = []
-        for part in sorted(fileio.list_files(self._dir, suffix=".parquet", spark=None)):
-            n = pq.ParquetFile(self._open_manifest(part)).metadata.num_rows
-            for off in range(0, n, self._files_per_task):
-                parts.append(
-                    _ManifestChunkPartition(part, off, min(self._files_per_task, n - off))
-                )
-        return parts or [_ManifestChunkPartition("", 0, 0)]
-
-    def read(self, partition: _ManifestChunkPartition):
-        if not partition.manifest_part:
-            return iter(())
-
-        def gen():
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            from pyspark.sql import types as T
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            from .io import fileio
-
-            full = to_arrow_schema(
-                T.StructType.fromJson(json.loads(self.options["schema_json"]))
-            )
-            if self._lineage:
-                data_target = pa.schema([full.field(n) for n in self._fields])
-            else:
-                data_target = full
-            mcols = ["file_path"] + (["sequence_number"] if self._lineage else [])
-            chunk = pq.read_table(
-                self._open_manifest(partition.manifest_part), columns=mcols
-            ).slice(partition.offset, partition.count)
-            seqs = (
-                chunk.column("sequence_number").to_pylist()
-                if self._lineage
-                else [None] * chunk.num_rows
-            )
-            for path, seq in zip(chunk.column("file_path").to_pylist(), seqs):
-                if not self._lineage:
-                    yield from _arrow_batches_for_file(path, self._fields, target=data_target)
-                    continue
-                off = 0
-                for b in _arrow_batches_for_file(path, self._fields, target=data_target):
-                    n = b.num_rows
-                    arrays = list(b.columns) + [
-                        pa.repeat(pa.scalar(path, pa.string()), n),
-                        pa.array(range(off, off + n), pa.int64()),
-                        pa.repeat(pa.scalar(seq, pa.int64()), n),
-                    ]
-                    off += n
-                    yield pa.RecordBatch.from_arrays(arrays, schema=full)
-
-        return gen()
 
 
 class IcebergStreamReader(DataSourceStreamReader):
@@ -808,10 +683,6 @@ class IcebergDataSource(DataSource):
     def schema(self):
         from pyspark.sql import types as T
 
-        if "path_manifest_dir" in self.options:
-            # planned-read mode: the scan ships the (projected) schema
-            # explicitly — there is no table handle to derive it from
-            return T.StructType.fromJson(json.loads(self.options["schema_json"]))
         meta = _load_metadata(self.options)
         base = meta.schema().to_spark()
         # plain fields only: the streaming runner round-trips this schema
@@ -820,8 +691,6 @@ class IcebergDataSource(DataSource):
         return T.StructType([T.StructField(f.name, f.dataType, True) for f in base.fields])
 
     def reader(self, schema) -> DataSourceReader:
-        if "path_manifest_dir" in self.options:
-            return IcebergPlannedReader(self.options)
         return IcebergBatchReader(self.options)
 
     def streamReader(self, schema) -> IcebergStreamReader:

@@ -44,10 +44,7 @@ from ..expressions import (
     AlwaysTrue,
     And,
     BooleanExpression,
-    BoundPredicate,
     In,
-    Not,
-    Or,
     bind,
 )
 from ..expressions.parser import parse as parse_filter
@@ -1125,40 +1122,6 @@ class Table:
 
         return ExpireSnapshots(self)
 
-    def clean_scan_plans(self, max_age_hours: Optional[float] = None, now_ms: Optional[int] = None) -> List[str]:
-        """Sweep transient scan-plan path manifests (written by the
-        streaming distributed read under ``metadata/scan-plans/``)
-        older than ``max_age_hours`` (default: the
-        ``read.plan.max-age-hours`` table property, 24h). Age comes
-        from the millisecond-timestamp prefix each plan dir carries in
-        its NAME, so no object-store mtime support is needed; the age
-        guard keeps in-flight reads safe (a running query holds a plan
-        younger than any sane threshold). Lifetime caveat: a LAZY
-        streamed DataFrame held longer than the guard can lose its plan
-        dir to this sweep — raise the property for long-lived handles.
-        Also runs as part of
-        ``expire_snapshots().commit(clean_files=True)``. Returns the
-        removed plan-dir paths."""
-        from ..io import fileio
-
-        if max_age_hours is None:
-            max_age_hours = float(self.metadata.properties.get("read.plan.max-age-hours", "24"))
-        base = posixpath.join(_metadata_base(self.metadata), "scan-plans")
-        now = now_ms if now_ms is not None else int(time.time() * 1000)
-        cutoff = now - int(max_age_hours * 3600_000)
-        dirs: Set[str] = set()
-        for f in fileio.list_files(base, suffix="", spark=self.spark):
-            rest = f.split("/scan-plans/", 1)
-            if len(rest) == 2 and "/" in rest[1]:
-                dirs.add(posixpath.join(base, rest[1].split("/", 1)[0]))
-        removed: List[str] = []
-        for d in sorted(dirs):
-            stamp = d.rsplit("/", 1)[1].split("-", 1)[0]
-            if stamp.isdigit() and int(stamp) < cutoff:
-                fileio.remove_recursive(d, self.spark)
-                removed.append(d)
-        return removed
-
     def remove_orphan_files(
         self,
         older_than_ms: Optional[int] = None,
@@ -1184,8 +1147,6 @@ class Table:
         ``hdfs://nn-alias/p`` protects the listing's
         ``hdfs://nn:8020/p`` (ADVICE r14 #5; key collisions can only
         bias toward KEEPING a file, never deleting a referenced one).
-        Scan-plan dirs keep their own age-guarded sweep
-        (:meth:`clean_scan_plans`) and are excluded here.
 
         Spark shape (100 TB): the referenced DATA/DELETE file set is
         ONE ``spark.read.parquet`` over the deduped live-manifest
@@ -1265,18 +1226,13 @@ class Table:
             from iceberg_python_spark.io import fileio as _f
 
             for pfx in prefixes:
-                if "/scan-plans" in pfx:
-                    continue
                 lp = _f.to_local(pfx) if not _f.is_remote(pfx) else None
                 if lp is not None and os.path.isfile(lp):
                     yield (pfx, int(os.path.getmtime(lp) * 1000))
                     continue
                 # real store mtimes; None when the store reports none —
                 # such files are NEVER deletion candidates (ADVICE r14 #1)
-                for f, mt in _f.list_files_with_mtime(pfx, spark=None):
-                    if "/scan-plans/" in f:
-                        continue
-                    yield (f, mt)
+                yield from _f.list_files_with_mtime(pfx, spark=None)
 
         listed = spark.sparkContext.parallelize(tops, max(len(tops), 1)).mapPartitions(
             lambda it: _list(list(it))
@@ -2928,27 +2884,9 @@ class Transaction:
 # ---------------------------------------------------------------------------
 
 
-def _bound_refs(expr: BooleanExpression) -> Set[str]:
-    """Field NAMES a bound expression references (for read-side column
-    sets: the post-scan filter needs its columns in the projection)."""
-    out: Set[str] = set()
-
-    def walk(e: BooleanExpression) -> None:
-        if isinstance(e, (And, Or)):
-            walk(e.left)
-            walk(e.right)
-        elif isinstance(e, Not):
-            walk(e.child)
-        elif isinstance(e, BoundPredicate):
-            out.add(e.field.name)
-
-    walk(expr)
-    return out
-
-
 class _PlanInputs:
     """One scan's planning inputs, computed once and shared by the
-    driver-loop, distributed and streamed planners (see
+    driver-loop and distributed planners (see
     ``DataScan._plan_inputs``). ``manifest_files`` is None when nothing
     is planned client-side (no snapshot, a provably-false filter, or
     server-side planning)."""
@@ -3277,11 +3215,10 @@ class DataScan:
         return tasks
 
     def _pruned_entry_dfs(self, plan: "_PlanInputs"):
-        """Per-spec DataFrames of SURVIVING data-manifest entries —
-        manifest summary pruning driver-side (cheap, O(manifests)), then
-        partition-tuple + metrics pruning as Catalyst predicates on
-        executors. Shared by the collect-based distributed planner and
-        the streaming distributed read (which never collects)."""
+        """Per-spec DataFrames of SURVIVING data-manifest entries for
+        ``_plan_files_distributed`` — manifest summary pruning
+        driver-side (cheap, O(manifests)), then partition-tuple + metrics
+        pruning as Catalyst predicates on executors."""
         from ..manifests_distributed import (  # local import avoids cycle
             json_storage_spark_type,
             metrics_spark_predicate,
@@ -3339,259 +3276,6 @@ class DataScan:
                 df = df.where(metrics_spark_predicate(bound, "stats_json"))
             yield spec_id, spec, df
 
-    def _to_df_streaming_distributed(self, plan: "_PlanInputs", projected: Schema):
-        """Distributed planning that STAYS distributed into the read
-        (SCALE.md r08 known limit; VERDICT r08 #2): above the
-        distributed-planning threshold, the pruning job's surviving
-        entries are written to a transient parquet path-manifest under
-        ``{table}/metadata/scan-plans/`` (a distributed write — the
-        file list NEVER materializes on the driver), and the scan reads
-        through the Python DataSource's planned-manifest mode, whose
-        InputPartitions are (manifest part, row-chunk) handles: driver
-        memory is O(task count), not O(files). This is the engine's
-        answer to the reference's ManifestGroupPlanner.plan_files
-        (table/__init__.py:2622-2667) at file counts where even a
-        compact path collect is a driver bottleneck.
-
-        MoR tables stream too (r09 known limit, closed r10): the
-        delete-file INDEX is built driver-side (delete files are orders
-        of magnitude fewer than data files — the reference's
-        DeleteFileIndex makes the same driver-side choice), the path
-        manifest carries each data file's sequence number, the planned
-        reader synthesizes (_ips_file, _ips_pos, _ips_seq), and deletes
-        are applied as executor-side anti-joins after the scan
-        (see ``_apply_streamed_deletes``).
-
-        Returns None (-> caller falls back to the exact task-list path)
-        when the scan needs per-task state the streamed shape cannot
-        carry: non-parquet data, schema evolution that name-projection
-        cannot express (renames / type promotions), or an explicit
-        ``read.plan.distributed-read=false``. Server-side planning never
-        reaches here (``plan.distributed`` is false for it).
-        Row-level filters are re-applied post-scan, so skipping
-        residual-based file pruning is sound (residuals only skip work,
-        never change results).
-
-        The path manifest is transient scan state: swept by the
-        age-guarded ``Table.clean_scan_plans`` (run standalone or as
-        part of ``expire_snapshots().commit(clean_files=True)``) — the
-        age guard keeps in-flight reads safe."""
-        import math
-
-        metadata, schema, bound = plan.metadata, plan.schema, plan.bound
-        props = metadata.properties
-        if str(props.get("read.plan.distributed-read", "true")).lower() != "true":
-            return None
-        # MoR: the DELETE side of the index stays driver-side (orders of
-        # magnitude fewer files than data — the same asymmetry the
-        # reference's DeleteFileIndex relies on,
-        # table/delete_file_index.py:105); the deletes themselves are
-        # READ executor-side and anti-joined after the planned scan, so
-        # the data-file list still never touches the driver.
-        deletes = _DeleteIndex.from_manifests(metadata, schema, plan.manifest_files)
-        pos_dels, eq_dels = deletes.pos, deletes.eq
-        spark = self.table.spark
-        cols = [
-            "file_path",
-            "file_format",
-            "schema_id",
-            "record_count",
-            "file_size_in_bytes",
-            "sequence_number",
-        ]
-        # name-mapped foreign files (add_files) carry their physical
-        # column names in stats_json; flag them here (tiny boolean per
-        # row) instead of shipping the stats blob into the path manifest
-        nm_flag = F.coalesce(F.col("stats_json").contains('"name_map"'), F.lit(False))
-        dfs = [
-            df.select(*cols, nm_flag.alias("has_name_map"))
-            for _sid, _spec, df in self._pruned_entry_dfs(plan)
-        ]
-        out_schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in projected.to_spark().fields]
-        )
-        if not dfs:
-            self._streaming_plan_info = {"n_files": 0, "plan_dir": None}
-            return spark.createDataFrame([], schema=out_schema)
-        union = dfs[0]
-        for extra in dfs[1:]:
-            union = union.unionByName(extra)
-        # dir name leads with a millisecond timestamp so the age-guarded
-        # sweeper (Table.clean_scan_plans) needs no store mtime support
-        plan_dir = posixpath.join(
-            _metadata_base(metadata),
-            "scan-plans",
-            f"{int(time.time() * 1000)}-{uuid.uuid4().hex}",
-        )
-        n_manifest_parts = int(min(64, plan.est_entries // 50_000 + 1))
-        try:
-            union.repartition(n_manifest_parts).write.mode("overwrite").parquet(plan_dir)
-        except Exception:
-            # read-only storage credentials (or any write failure under
-            # metadata/) must degrade to the exact task-list path, not
-            # fail the scan (ADVICE r09)
-            return None
-
-        from ..io import fileio
-
-        pm = spark.read.parquet(plan_dir)
-        info = pm.agg(
-            F.count("*").alias("n"),
-            F.sum("file_size_in_bytes").alias("bytes"),
-            F.collect_set("file_format").alias("fmts"),
-            F.collect_set("schema_id").alias("sids"),
-            # name-projection would silently null out name-mapped
-            # columns -> such tables take the exact path
-            F.max("has_name_map").alias("has_name_map"),
-        ).first()
-        n_files = info["n"] or 0
-        if n_files == 0:
-            fileio.remove_recursive(plan_dir, spark)
-            self._streaming_plan_info = {"n_files": 0, "plan_dir": None}
-            return spark.createDataFrame([], schema=out_schema)
-        if {str(f).upper() for f in info["fmts"]} != {"PARQUET"} or info["has_name_map"]:
-            fileio.remove_recursive(plan_dir, spark)
-            return None
-        # name-projection safety across the schema ids present: every
-        # field the scan touches must carry the SAME (id, name, type) in
-        # each file schema it exists in — added columns (absent in old
-        # files) null-fill by name, which is exactly the evolution
-        # semantics; renames / promotions need per-group reads -> fall back
-        needed = {f.name for f in projected.fields}
-        for t_ in _bound_refs(bound):
-            needed.add(t_)
-        # equality-delete keys must be read to evaluate the anti-join
-        for _dseq, _p, _fids, _sz in eq_dels:
-            for fid in _fids:
-                try:
-                    needed.add(schema.find_field(fid).name)
-                except ValueError:
-                    fileio.remove_recursive(plan_dir, spark)
-                    return None  # eq key dropped from current schema
-        for sid in info["sids"]:
-            try:
-                fschema = metadata.schema_by_id(sid)
-            except ValueError:
-                fileio.remove_recursive(plan_dir, spark)
-                return None
-            by_id = {f.field_id: f for f in fschema.fields}
-            by_name = {f.name: f for f in fschema.fields}
-            for f in schema.fields:
-                if f.name not in needed:
-                    continue
-                old_f = by_id.get(f.field_id)
-                if old_f is not None and (old_f.name != f.name or old_f.field_type != f.field_type):
-                    fileio.remove_recursive(plan_dir, spark)
-                    return None
-                # a file column may bear this NAME under a different id
-                # (rename a->b then add a new column a): a by-name read
-                # would surface the old column's values where the new
-                # column must be null -> exact field-id-aligned path
-                named = by_name.get(f.name)
-                if named is not None and named.field_id != f.field_id:
-                    fileio.remove_recursive(plan_dir, spark)
-                    return None
-
-        # task granularity: pack files toward maxPartitionBytes, and cap
-        # total task count (the JVM scheduler is the remaining O(tasks))
-        try:
-            mpb = int(str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")).rstrip("b"))
-        except ValueError:
-            mpb = 134217728
-        avg = max(1, (info["bytes"] or 0) // n_files)
-        max_tasks = int(props.get("read.plan.max-tasks", "100000"))
-        files_per_task = max(1, min(int(mpb // avg), 1000), math.ceil(n_files / max_tasks))
-        mor = bool(pos_dels or eq_dels)
-        self._streaming_plan_info = {
-            "n_files": int(n_files),
-            "plan_dir": plan_dir,
-            "files_per_task": int(files_per_task),
-            "n_pos_deletes": len(pos_dels),
-            "n_eq_deletes": len(eq_dels),
-        }
-
-        from ..spark_datasource import register_data_source
-
-        register_data_source(spark)
-        read_fields = [f for f in schema.to_spark().fields if f.name in needed]
-        struct_fields = [T.StructField(f.name, f.dataType, True) for f in read_fields]
-        if mor:
-            struct_fields += [
-                T.StructField("_ips_file", T.StringType(), True),
-                T.StructField("_ips_pos", T.LongType(), True),
-                T.StructField("_ips_seq", T.LongType(), True),
-            ]
-        read_schema = T.StructType(struct_fields)
-        out = (
-            spark.read.format("iceberg_python_spark")
-            .option("path_manifest_dir", plan_dir)
-            .option("schema_json", json.dumps(read_schema.jsonValue()))
-            .option("files_per_task", str(files_per_task))
-            .option("lineage", "true" if mor else "false")
-            .load()
-        )
-        if mor:
-            out = self._apply_streamed_deletes(spark, out, schema, pos_dels, eq_dels)
-        if not isinstance(bound, AlwaysTrue):
-            out = out.where(to_spark_column(bound))
-        out = out.select(*[F.col(f.name) for f in projected.fields])
-        if self.limit is not None:
-            out = out.limit(self.limit)
-        return out
-
-    def _apply_streamed_deletes(self, spark, out, schema, pos_dels, eq_dels):
-        """Executor-side delete application for the streamed MoR read:
-        position deletes (parquet or DV Puffin) anti-join on the
-        synthesized (_ips_file, _ips_pos); equality deletes anti-join on
-        null-safe key equality plus the spec's strictly-newer rule
-        (data _ips_seq < delete seq — reference
-        delete_file_index.py:105). Path matching is exact because file
-        paths are unique per file incarnation (uuid names; the exact
-        task path relies on the same disjointness). Delete rows are
-        read as distributed scans and broadcast only under the
-        size-guarded threshold — nothing delete-side transits the
-        driver."""
-        threshold = _delete_broadcast_threshold(self.table.metadata)
-        if pos_dels:
-            dels = _pos_deletes_df(spark, sorted({p for _s, p, _z in pos_dels}))
-            sizes = [sz for _s, _p, sz in pos_dels]
-            total = sum(sizes) if all(sz >= 0 for sz in sizes) else None
-            cond = (
-                _norm_lineage_file(dels["file_path"]) == F.col("_ips_file")
-            ) & (dels["pos"] == F.col("_ips_pos"))
-            out = out.join(_maybe_broadcast(dels, total, threshold), cond, "left_anti")
-        by_fids: Dict[Tuple[int, ...], List[Tuple[int, str, int]]] = {}
-        for dseq, path, fids, sz in eq_dels:
-            if fids:
-                by_fids.setdefault(tuple(fids), []).append((dseq, path, sz))
-        for fids, items in sorted(by_fids.items()):
-            fields_ = [schema.find_field(fid) for fid in fids]
-            cols_ = [f.name for f in fields_]
-            del_schema = Schema(*fields_).to_spark()
-            # one read per distinct delete sequence number (files sharing
-            # a seq read together); keep the NEWEST seq per key so a
-            # re-inserted row (data seq >= old delete seq) survives
-            by_seq: Dict[int, List[str]] = {}
-            for dseq, path, _sz in items:
-                by_seq.setdefault(int(dseq), []).append(path)
-            parts = [
-                _read_files(spark, del_schema, "PARQUET", sorted(paths)).withColumn(
-                    "_dseq", F.lit(dseq).cast("long")
-                )
-                for dseq, paths in sorted(by_seq.items())
-            ]
-            dels = parts[0]
-            for p in parts[1:]:
-                dels = dels.unionByName(p)
-            dels = dels.groupBy(*cols_).agg(F.max("_dseq").alias("_dseq"))
-            cond = F.col("_ips_seq") < dels["_dseq"]
-            for c in cols_:
-                cond = cond & out[c].eqNullSafe(dels[c])
-            sizes = [sz for _s, _p, sz in items]
-            total = sum(sizes) if all(sz >= 0 for sz in sizes) else None
-            out = out.join(_maybe_broadcast(dels, total, threshold), cond, "left_anti")
-        return out
-
     # -- execution ----------------------------------------------------------
     def to_df(self, row_lineage: bool = False) -> DataFrame:
         return self._to_df_of(self.table.metadata, row_lineage=row_lineage)
@@ -3602,10 +3286,6 @@ class DataScan:
         if row_lineage and metadata.format_version < 3:
             raise ValueError("row lineage needs a format-version 3 table (next-row-id)")
         plan = self._plan_inputs(metadata)
-        if plan.distributed and not row_lineage:
-            streamed = self._to_df_streaming_distributed(plan, projected)
-            if streamed is not None:
-                return streamed
         tasks = self.plan_files(metadata, plan=plan)
         sel = [F.col(f.name) for f in projected.fields]
         if row_lineage:

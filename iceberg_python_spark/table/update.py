@@ -767,9 +767,6 @@ class ExpireSnapshots:
             for s in expired_stats:
                 if s.get("statistics-path") and _rm(s["statistics-path"], self.table.spark):
                     removed.append(s["statistics-path"])
-            # transient scan-plan manifests age out with the same
-            # maintenance pass (age-guarded; see Table.clean_scan_plans)
-            removed += self.table.clean_scan_plans(now_ms=now_ms)
         return removed
 
     def _clean_orphaned(self, survivors, expired) -> List[str]:

@@ -136,3 +136,19 @@ def test_guard_flags_broadcast_crossjoin_in_combined_rows():
         "    return env['a'].crossJoin(F.broadcast(env['b']))\n"
     )
     assert _broadcast_crossjoins(ast.parse(snippet)) == ["_q_x_combined:2", "_q_x_combined:4"]
+
+
+def test_overlap_threads_inherit_job_tags(spark):
+    """Each ``_overlap`` thread carries the caller's job tags, so jobs it
+    runs stay attributable, and wrapping the thunks raises no
+    missing-session warning."""
+    import warnings
+
+    spark.addTag("overlap-probe")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            seen = entry._overlap(lambda: set(spark.getTags()), lambda: set(spark.getTags()))
+    finally:
+        spark.removeTag("overlap-probe")
+    assert all("overlap-probe" in tags for tags in seen), seen

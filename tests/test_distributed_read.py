@@ -1,24 +1,28 @@
-"""Streaming distributed read: above the distributed-planning threshold
-the scan must stay distributed INTO the read — the surviving file list is
-written as a transient path manifest by a Spark job and consumed by the
-Python DataSource's planned-manifest mode; the driver never materializes
-file paths (r08 SCALE.md known limit, VERDICT r08 #2).
+"""Reads above the distributed-planning threshold: manifest pruning
+runs as a Spark job (``_plan_files_distributed``) and the surviving
+tasks are read by ``_read_tasks``, the same reader every other scan
+uses. Every table here sets ``read.plan.distributed-threshold=0``.
 
 Covered here:
-- plan parity: the streamed path reads exactly the files the exact
-  task-list planner would (file count via metrics pruning) and returns
+- plan parity: the distributed planner keeps exactly the files the
+  driver-loop planner keeps (metrics pruning) and the read returns
   value-identical rows;
-- plan shape: ``plan_files`` is never called on the streamed path (a
-  raising monkeypatch proves no driver task list is built);
-- fallbacks: delete files (MoR), renamed-column schema evolution, and
-  the ``read.plan.distributed-read=false`` opt-out all take the exact
-  task-list path;
+- deletes: position deletes (parquet and DV Puffin) and equality
+  deletes under the strictly-newer sequence rule;
+- schema evolution: rename, rename-then-re-add, added-column null fill;
+- name-mapped ``add_files`` tables and ORC data files;
 - empty results and limit/projection behavior.
+
+Each read also asserts that the scan planned distributed and that
+``to_df()`` wrote nothing under the table's ``metadata/scan-plans``.
 """
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from iceberg_python_spark.io.fileio import to_local
 from iceberg_python_spark.schema import schema_from_spark
 
 from .conftest import SF_DIR
@@ -49,82 +53,60 @@ def table(cat, spark):
     return cat.load_table("db.li_ranges")
 
 
-def _exact_twin(cat, name):
-    t = cat.load_table(name)
-    t.set_properties({"read.plan.distributed-read": "false"})
-    return cat.load_table(name)
+def _read_distributed(scan):
+    """``scan.to_df()``, after checking that the scan plans through the
+    distributed planner; the read must leave no scan-plan files under
+    the table's metadata."""
+    assert scan._plan_inputs(scan.table.metadata).distributed
+    df = scan.to_df()
+    assert not os.path.exists(os.path.join(to_local(scan.table.location), "metadata", "scan-plans"))
+    return df
 
 
 def test_streamed_matches_tasklist_values_and_pruning(cat, table, spark):
+    """The distributed planner keeps the same files as the driver loop,
+    and the two reads return the same rows."""
     flt = "l_orderkey < 100 and l_quantity > 10"
     sel = ("l_orderkey", "l_quantity", "l_shipdate")
     scan = table.scan(row_filter=flt, selected_fields=sel)
-    streamed = scan.to_df()
-    info = scan._streaming_plan_info
-    assert info["plan_dir"] is not None
+    distributed = _read_distributed(scan)
+    dist_files = sorted(task.file_path for task in scan.plan_files())
 
-    exact = _exact_twin(cat, "db.li_ranges")
-    tasks = exact.scan(row_filter=flt).plan_files()
+    t = cat.load_table("db.li_ranges")
+    t.set_properties({"read.plan.distributed-threshold": "1000000000"})
+    try:
+        loop = cat.load_table("db.li_ranges").scan(row_filter=flt, selected_fields=sel)
+        assert not loop._plan_inputs(loop.table.metadata).distributed
+        loop_files = sorted(task.file_path for task in loop.plan_files())
+        b = loop.to_df().toPandas().sort_values(list(sel)).reset_index(drop=True)
+    finally:
+        cat.load_table("db.li_ranges").set_properties({"read.plan.distributed-threshold": "0"})
     # metrics pruning: the low-orderkey filter must prune the upper
-    # range files on BOTH paths, identically
-    assert 1 <= len(tasks) < 4
-    assert info["n_files"] == len(tasks)
+    # range files on BOTH planners, identically
+    assert 1 <= len(loop_files) < 4
+    assert dist_files == loop_files
 
-    a = streamed.toPandas().sort_values(list(sel)).reset_index(drop=True)
-    b = (
-        exact.scan(row_filter=flt, selected_fields=sel)
-        .to_df()
-        .toPandas()
-        .sort_values(list(sel))
-        .reset_index(drop=True)
-    )
+    a = distributed.toPandas().sort_values(list(sel)).reset_index(drop=True)
     assert a.equals(b)
-    # restore the property for other tests
-    cat.load_table("db.li_ranges").set_properties({"read.plan.distributed-read": "true"})
-
-
-def test_streamed_path_never_builds_task_list(cat, table, monkeypatch, spark):
-    import iceberg_python_spark.table as tbl
-
-    def boom(*a, **k):
-        raise AssertionError("plan_files called on the streamed path")
-
-    monkeypatch.setattr(tbl.DataScan, "plan_files", boom)
-    scan = cat.load_table("db.li_ranges").scan(
-        row_filter="l_quantity > 45", selected_fields=("l_orderkey",)
-    )
-    n = scan.to_df().count()
-    assert n > 0 and scan._streaming_plan_info["n_files"] == 4
 
 
 def test_streamed_empty_result_schema(cat, table):
     scan = cat.load_table("db.li_ranges").scan(
         row_filter="l_quantity > 1000000", selected_fields=("l_orderkey", "l_quantity")
     )
-    df = scan.to_df()
+    df = _read_distributed(scan)
     assert df.columns == ["l_orderkey", "l_quantity"] and df.count() == 0
 
 
 def test_streamed_limit(cat, table):
-    df = cat.load_table("db.li_ranges").scan(selected_fields=("l_orderkey",), limit=7).to_df()
-    assert df.count() == 7
-
-
-def test_opt_out_property_falls_back(cat, table):
-    t = cat.load_table("db.li_ranges")
-    t.set_properties({"read.plan.distributed-read": "false"})
-    try:
-        scan = cat.load_table("db.li_ranges").scan(selected_fields=("l_orderkey",))
-        scan.to_df()
-        assert not hasattr(scan, "_streaming_plan_info")
-    finally:
-        cat.load_table("db.li_ranges").set_properties({"read.plan.distributed-read": "true"})
+    scan = cat.load_table("db.li_ranges").scan(selected_fields=("l_orderkey",), limit=7)
+    assert _read_distributed(scan).count() == 7
 
 
 def test_delete_files_stream(cat, spark):
-    """A MoR table (position deletes) STREAMS through the planned read
-    (r09 known limit, closed r10): the reader synthesizes
-    (_ips_file, _ips_pos) and the deletes anti-join executor-side."""
+    """A MoR table (position deletes) planned distributed: the planner
+    attaches the delete files to the surviving tasks and ``_read_tasks``
+    applies them."""
     df = spark.range(100).select(F.col("id").cast("long").alias("k"), (F.col("id") * 2).alias("v"))
     t = cat.create_table(
         "db.mor_stream",
@@ -139,47 +121,18 @@ def test_delete_files_stream(cat, spark):
     t.delete("k >= 90")
     t = cat.load_table("db.mor_stream")
     scan = t.scan()
-    out = scan.to_df()
+    out = _read_distributed(scan)
     assert out.count() == 90
-    info = scan._streaming_plan_info
-    assert info["plan_dir"] is not None and info["n_pos_deletes"] >= 1
+    assert any(task.delete_files for task in scan.plan_files())
     # values survive exactly (not just counts), and a filter composes
     rows = {r.k: r.v for r in out.collect()}
     assert rows == {i: i * 2 for i in range(90)}
     assert cat.load_table("db.mor_stream").scan(row_filter="k < 5").to_df().count() == 5
 
 
-def test_mor_streamed_never_builds_task_list(cat, spark, monkeypatch):
-    """The MoR variant of the no-collect proof: plan_files is never
-    called when a deleted-from table streams."""
-    import iceberg_python_spark.table as tbl
-
-    df = spark.range(60).select(F.col("id").alias("k"), (F.col("id") + 7).alias("v"))
-    t = cat.create_table(
-        "db.mor_nocollect",
-        schema_from_spark(df.schema),
-        properties={
-            "read.plan.distributed-threshold": "0",
-            "write.delete.mode": "merge-on-read",
-        },
-    )
-    t.append(df)
-    t = cat.load_table("db.mor_nocollect")
-    t.delete("k >= 20 and k < 40")
-    t = cat.load_table("db.mor_nocollect")
-
-    def boom(*a, **k):
-        raise AssertionError("plan_files called on the streamed MoR path")
-
-    monkeypatch.setattr(tbl.DataScan, "plan_files", boom)
-    scan = t.scan()
-    assert scan.to_df().count() == 40
-    assert scan._streaming_plan_info["n_pos_deletes"] >= 1
-
-
 def test_mor_dv_puffin_streams(cat, spark):
-    """v3 deletion vectors (Puffin) apply on the streamed path too —
-    dv_positions_df expands bitmaps executor-side."""
+    """v3 deletion vectors (Puffin) apply on a distributed-planned read
+    too — dv_positions_df expands bitmaps executor-side."""
     df = spark.range(50).select(F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
     t = cat.create_table(
         "db.mor_dv_stream",
@@ -196,15 +149,16 @@ def test_mor_dv_puffin_streams(cat, spark):
     t.delete("k >= 40")
     t = cat.load_table("db.mor_dv_stream")
     scan = t.scan()
-    rows = {r.k for r in scan.to_df().collect()}
+    rows = {r.k for r in _read_distributed(scan).collect()}
     assert rows == set(range(40))
-    assert scan._streaming_plan_info["n_pos_deletes"] >= 1
+    assert any(task.delete_files for task in scan.plan_files())
 
 
 def test_eq_deletes_stream_with_seq_rule(cat, spark):
-    """Equality deletes stream with the strictly-newer sequence rule: a
-    row RE-INSERTED after the delete (data seq > delete seq) survives,
-    while the older incarnation is dropped."""
+    """Equality deletes on a distributed-planned read keep the
+    strictly-newer sequence rule: a row RE-INSERTED after the delete
+    (data seq > delete seq) survives, while the older incarnation is
+    dropped."""
     df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k: long, s: string")
     t = cat.create_table(
         "db.eqdel_stream",
@@ -219,14 +173,18 @@ def test_eq_deletes_stream_with_seq_rule(cat, spark):
     t.append(spark.createDataFrame([(2, "b2")], "k: long, s: string"))
     t = cat.load_table("db.eqdel_stream")
     scan = t.scan()
-    rows = {r.k: r.s for r in scan.to_df().collect()}
+    rows = {r.k: r.s for r in _read_distributed(scan).collect()}
     assert rows == {1: "a", 2: "b2", 3: "c"}
-    assert scan._streaming_plan_info["n_eq_deletes"] == 1
+    # one equality-delete file, attached to the older files only
+    tasks = scan.plan_files()
+    assert len({d for task in tasks for d in task.eq_delete_files}) == 1
+    newest = max(task.sequence_number for task in tasks)
+    assert all(bool(task.eq_delete_files) == (task.sequence_number < newest) for task in tasks)
 
 
 def test_schema_rename_falls_back(cat, spark):
-    """Files written before a column RENAME need field-id alignment the
-    name-projection read cannot express -> exact path, correct values."""
+    """Files written before a column RENAME are read by field id: the
+    renamed column keeps its values."""
     df = spark.range(50).select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
     t = cat.create_table(
         "db.renamed", schema_from_spark(df.schema),
@@ -237,16 +195,16 @@ def test_schema_rename_falls_back(cat, spark):
     t.update_schema().rename_column("b", "b2").commit()
     t = cat.load_table("db.renamed")
     scan = t.scan()
-    out = scan.to_df()
+    out = _read_distributed(scan)
     assert out.columns == ["a", "b2"] and out.count() == 50
-    assert not hasattr(scan, "_streaming_plan_info")
+    assert {r.a: r.b2 for r in out.collect()} == {i: i + 1 for i in range(50)}
 
 
 def test_rename_then_readd_name_falls_back(cat, spark):
     """Rename a->a2 then ADD a new column named a: old files carry a
     column NAMED a under the old field id, so a by-name read would
     surface the renamed column's values where the new column must be
-    null -> exact path (ADVICE r09 high)."""
+    null; the field-id read nulls it (ADVICE r09 high)."""
     df = spark.range(5).select(F.col("id").alias("a"), (F.col("id") + 100).alias("z"))
     t = cat.create_table(
         "db.readd", schema_from_spark(df.schema),
@@ -260,19 +218,16 @@ def test_rename_then_readd_name_falls_back(cat, spark):
 
     t.update_schema().add_column("a", LongType()).commit()
     t = cat.load_table("db.readd")
-    # project ONLY (z, a) — a2 (the renamed column) is not projected, so
-    # the per-id check alone would pass; the name-collision check must
-    # force the exact field-id-aligned path
+    # project ONLY (z, a) — a2 (the renamed column) is not projected,
+    # so only the field-id resolution keeps the old values out of a
     scan = t.scan(selected_fields=("z", "a"))
-    out = scan.to_df()
+    out = _read_distributed(scan)
     rows = {r.z: r.a for r in out.collect()}
     assert len(rows) == 5 and all(v is None for v in rows.values())
-    assert not hasattr(scan, "_streaming_plan_info")
 
 
 def test_added_column_streams_with_null_fill(cat, spark):
-    """Added-column evolution IS name-projection safe: old files
-    null-fill the new column on the streamed path."""
+    """Added-column evolution: old files null-fill the new column."""
     df = spark.range(30).select(F.col("id").alias("a")).repartition(1)
     t = cat.create_table(
         "db.added", schema_from_spark(df.schema),
@@ -288,38 +243,17 @@ def test_added_column_streams_with_null_fill(cat, spark):
     t.append(df2)
     t = cat.load_table("db.added")
     scan = t.scan()
-    out = scan.to_df()
-    assert scan._streaming_plan_info["n_files"] == 2
+    out = _read_distributed(scan)
+    assert len(scan.plan_files()) == 2
     rows = {r.a: r.c for r in out.collect()}
     assert len(rows) == 40 and rows[5] is None and rows[35] == 350
 
 
-def test_clean_scan_plans_age_guard(cat, table):
-    """Streamed scans leave timestamped plan dirs under
-    metadata/scan-plans; the sweeper removes only dirs older than the
-    age guard (in-flight plans survive), and expire_snapshots'
-    clean_files pass includes the sweep."""
-    import os
-
-    t = cat.load_table("db.li_ranges")
-    scan = t.scan(selected_fields=("l_orderkey",))
-    scan.to_df().count()
-    base = os.path.join(t.location, "metadata", "scan-plans")
-    dirs = os.listdir(base)
-    assert dirs, "streamed scan should have left a plan dir"
-    # young plans survive a sweep at the default guard
-    assert t.clean_scan_plans() == []
-    assert set(os.listdir(base)) == set(dirs)
-    # everything ages out when 'now' is far in the future
-    future = int(__import__("time").time() * 1000) + 48 * 3600_000
-    removed = t.clean_scan_plans(now_ms=future)
-    assert len(removed) == len(dirs) and os.listdir(base) == []
-
-
 def test_name_mapped_add_files_falls_back(cat, spark, tmp_path):
     """add_files tables whose files carry a name mapping (different
-    physical column names) must take the exact path — name projection
-    would silently null the mapped columns on the streamed read."""
+    physical column names): the distributed planner carries each file's
+    name map to the read, which would otherwise null the mapped
+    columns."""
     from iceberg_python_spark.name_mapping import PROPERTY_KEY, MappedField, NameMapping
 
     ext = spark.createDataFrame([(1, "x"), (2, "y")], "k: long, v: string")
@@ -347,15 +281,13 @@ def test_name_mapped_add_files_falls_back(cat, spark, tmp_path):
     t.add_files(paths)
     t = cat.load_table("db.addf_nm")
     scan = t.scan()
-    rows = {r.k: r.v for r in scan.to_df().collect()}
+    rows = {r.k: r.v for r in _read_distributed(scan).collect()}
     assert rows == {1: "x", 2: "y"}
-    assert not hasattr(scan, "_streaming_plan_info")
 
 
 def test_orc_through_distributed_planner(cat, spark):
-    """ORC data files keep their format through the collect-based
-    distributed planner (file_format was hardcoded PARQUET) and fall
-    back off the streamed path (parquet-only by design)."""
+    """ORC data files keep their format through the distributed
+    planner (file_format was hardcoded PARQUET)."""
     df = spark.range(20).select(F.col("id").alias("a"), (F.col("id") * 3).alias("b"))
     t = cat.create_table(
         "db.orc_dist",
@@ -368,6 +300,5 @@ def test_orc_through_distributed_planner(cat, spark):
     t.append(df)
     t = cat.load_table("db.orc_dist")
     scan = t.scan(row_filter="a >= 5")
-    out = scan.to_df()
+    out = _read_distributed(scan)
     assert out.count() == 15 and {r.b for r in out.collect()} == {i * 3 for i in range(5, 20)}
-    assert not hasattr(scan, "_streaming_plan_info")

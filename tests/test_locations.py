@@ -150,9 +150,8 @@ def test_custom_location_provider_impl(spark, tmp_path):
 
 def test_write_metadata_path_redirects_new_metadata(spark, tmp_path_factory):
     """write.metadata.path (reference locations.py:56): new metadata
-    JSON, manifests, scan plans and statistics files land under the
-    override; files recorded before the change keep working (absolute
-    paths)."""
+    JSON, manifests and statistics files land under the override;
+    files recorded before the change keep working (absolute paths)."""
     import os
 
     from iceberg_python_spark import SqliteCatalog
@@ -180,14 +179,13 @@ def test_write_metadata_path_redirects_new_metadata(spark, tmp_path_factory):
     t.update_statistics().set_ndv("id", 20).commit()
     t = cat.load_table("db.meta_redir")
     assert any(f.endswith(".stats.puffin") for f in os.listdir(alt))
-    # streamed scan plans honor it (threshold=0 forces the plan write)
+    # a distributed-planned read (threshold=0) writes no scan plans
     t.set_properties({"read.plan.distributed-threshold": "0"})
     t = cat.load_table("db.meta_redir")
     scan = t.scan(selected_fields=("id",))
     assert scan.to_df().count() == 25
-    plans = os.path.join(alt, "scan-plans")
-    assert os.path.isdir(plans) and os.listdir(plans)
-    assert t.clean_scan_plans(now_ms=2**62) and os.listdir(plans) == []
+    assert not os.path.exists(os.path.join(alt, "scan-plans"))
+    assert not os.path.exists(os.path.join(default_dir, "scan-plans"))
     # old (pre-override) snapshot remains readable: absolute paths
     first = t.metadata.snapshots[0]
     assert t.scan(snapshot_id=first.snapshot_id).to_df().count() == 20

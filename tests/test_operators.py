@@ -2398,7 +2398,7 @@ def test_connected_components_overlapped_loops(spark):
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
             pool.submit(
-                inheritable_thread_target(
+                inheritable_thread_target(spark)(
                     lambda kw=kw: {
                         r.node: r.component_id
                         for r in connected_components(edges, **kw).collect()

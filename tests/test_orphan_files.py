@@ -37,22 +37,23 @@ def test_remove_orphan_files_sweeps_only_aged_unreferenced(spark, catalog):
     old1 = _plant(t, "data/part-orphan-1.parquet", age_s=7 * 24 * 3600)
     old2 = _plant(t, "metadata/leftover.avro.tmp", age_s=7 * 24 * 3600)
     fresh = _plant(t, "data/part-inflight.parquet", age_s=0.0)
-    # scan-plan dirs are excluded (their own age-guarded sweep)
+    # a scan-plan file an earlier version left under metadata/ is an
+    # ordinary orphan: nothing references it
     plan = _plant(t, "metadata/scan-plans/123-abc/m.parquet", age_s=7 * 24 * 3600)
 
     dry = t.remove_orphan_files(dry_run=True)
     assert os.path.exists(to_local(old1))  # dry run deletes nothing
     assert {os.path.basename(p) for p in dry} == {
-        "part-orphan-1.parquet", "leftover.avro.tmp"
+        "part-orphan-1.parquet", "leftover.avro.tmp", "m.parquet"
     }
 
     removed = t.remove_orphan_files()
     assert {os.path.basename(p) for p in removed} == {
-        "part-orphan-1.parquet", "leftover.avro.tmp"
+        "part-orphan-1.parquet", "leftover.avro.tmp", "m.parquet"
     }
     assert not os.path.exists(to_local(old1)) and not os.path.exists(to_local(old2))
+    assert not os.path.exists(to_local(plan))
     assert os.path.exists(to_local(fresh))  # grace period protects in-flight
-    assert os.path.exists(to_local(plan))  # scan-plan sweep owns these
     # every referenced file survived: scans identical, inspect intact
     assert sorted(map(tuple, t.scan().to_df().collect())) == before
     assert t.inspect.files().count() >= 2

@@ -268,10 +268,10 @@ def test_broadcast_size_estimate_ndv_fallback(spark, tmp_path_factory):
     assert t2.broadcast_size_estimate() is None
 
 
-def test_streamed_mor_delete_is_broadcast_anti_join(spark, tmp_path_factory):
-    """The streamed MoR read applies position deletes as a broadcast
-    anti-join (size-guarded), never a nested loop; whole-file deletes
-    stay metadata-only (no delete files -> plain streamed path)."""
+def test_distributed_mor_delete_is_broadcast_anti_join(spark, tmp_path_factory):
+    """A MoR read planned by the distributed planner applies position
+    deletes as a broadcast anti-join (size-guarded), never a nested
+    loop."""
     from iceberg_python_spark import SqliteCatalog
 
     cat = SqliteCatalog("morplan", str(tmp_path_factory.mktemp("wh")), spark)
@@ -290,7 +290,6 @@ def test_streamed_mor_delete_is_broadcast_anti_join(spark, tmp_path_factory):
     t = cat.load_table("db.morplan")
     scan = t.scan()
     out = scan.to_df()
-    assert scan._streaming_plan_info["n_pos_deletes"] >= 1
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -8,7 +8,12 @@
   read that bypassed it (a direct ``spark.read.parquet(*paths)``) would
   bring back Spark's parallel file-listing job; and it captures the
   ``_metadata`` pseudo-column per chunk, which a reference elsewhere
-  would try to resolve through the chunks' union."""
+  would try to resolve through the chunks' union.
+- The table layer never reads through the package's Python DataSource
+  (``register_data_source`` or ``.format("iceberg_python_spark")``):
+  every scan reads its planned tasks through ``_read_tasks``, and
+  registering the source would set a session-wide conf on the caller's
+  session."""
 
 import ast
 import pathlib
@@ -26,6 +31,8 @@ LIST_READERS = {"parquet", "orc"}
 LIST_READ_OWNER = "_read_paths"
 #: the one function that may reference the _metadata pseudo-column
 METADATA_OWNER = "_read_files"
+#: the package's Python DataSource format name
+DATASOURCE_FORMAT = "iceberg_python_spark"
 
 
 def _receiver_names(node: ast.AST):
@@ -58,7 +65,8 @@ def _is_path_list(call: ast.Call) -> bool:
 
 def _findings(tree: ast.AST):
     """(kind, enclosing function, detail, line) for every reader call,
-    path-list read and ``_metadata`` reference in a module."""
+    path-list read, ``_metadata`` reference and DataSource use in a
+    module."""
 
     def walk(node: ast.AST, fn: str):
         for child in ast.iter_child_nodes(node):
@@ -72,6 +80,13 @@ def _findings(tree: ast.AST):
                 name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
                 if name in ALLOWED_CALLERS:
                     yield "call", fn, name, child.lineno
+                if name == "register_data_source" or (
+                    name == "format"
+                    and child.args
+                    and isinstance(child.args[0], ast.Constant)
+                    and child.args[0].value == DATASOURCE_FORMAT
+                ):
+                    yield "datasource", fn, name, child.lineno
                 if (
                     isinstance(f, ast.Attribute)
                     and f.attr in LIST_READERS
@@ -99,8 +114,9 @@ def _scan_package(root: pathlib.Path):
 
 
 def _offenders(root: pathlib.Path):
-    """({kind: offending findings}, {kind: findings seen})."""
-    offenders = {"call": [], "list_read": [], "metadata": []}
+    """({kind: offending findings}, {kind: findings seen}). Every
+    DataSource use offends: the guard runs it over the table layer."""
+    offenders = {"call": [], "list_read": [], "metadata": [], "datasource": []}
     seen = dict.fromkeys(offenders, 0)
     for kind, where, fn, detail in _scan_package(root):
         seen[kind] += 1
@@ -110,6 +126,8 @@ def _offenders(root: pathlib.Path):
             offenders[kind].append(f"{where} {fn}() reads a path list with .{detail}()")
         elif kind == "metadata" and fn != METADATA_OWNER:
             offenders[kind].append(f"{where} {fn}() references {detail}")
+        elif kind == "datasource":
+            offenders[kind].append(f"{where} {fn}() reads through the DataSource with {detail}()")
     return offenders, seen
 
 
@@ -147,4 +165,27 @@ def test_guard_flags_a_direct_path_list_read(tmp_path):
         "call": [],
         "list_read": ["scan() reads a path list with .parquet()", "scan() reads a path list with .orc()"],
         "metadata": ["scan() references _metadata.file_path"],
+        "datasource": [],
     }
+
+
+def test_table_layer_never_reads_through_the_datasource():
+    offenders, _ = _offenders(PACKAGE / "table")
+    assert not offenders["datasource"], offenders["datasource"]
+
+
+def test_guard_flags_a_datasource_read(tmp_path):
+    """Registering the source or naming its format is caught; another
+    format name is not."""
+    (tmp_path / "mod.py").write_text(
+        "from iceberg_python_spark.spark_datasource import register_data_source\n"
+        "def to_df(spark, d):\n"
+        "    register_data_source(spark)\n"
+        "    spark.read.format('noop').load()\n"
+        "    return spark.read.format('iceberg_python_spark').option('table_location', d).load()\n"
+    )
+    offenders, _ = _offenders(tmp_path)
+    assert [o.split(" ", 1)[1] for o in offenders["datasource"]] == [
+        "to_df() reads through the DataSource with register_data_source()",
+        "to_df() reads through the DataSource with format()",
+    ]

@@ -42,11 +42,12 @@ def compare(sdf, odf) -> tuple[bool, bool, bool]:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from host_memory import driver_memory
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master("local[16]")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory(16))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -33,6 +33,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+    from host_memory import driver_memory
     from pyspark.sql import SparkSession
 
     spark = (
@@ -43,7 +44,7 @@ def main() -> None:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory(48))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
