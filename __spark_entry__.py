@@ -64,6 +64,14 @@ def _wh(spark: SparkSession, sf_dir: str) -> dict:
     # behaves differently. Pin the pre-4.1 reading (UTC instants) so query
     # results are stable across pyspark versions (r04 regression).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # the package's Python DataSource (the spark_datasource_* rows) is
+    # registered here, once: Spark refuses to plan its pushFilters reader
+    # with this conf off, and setting it inside a row builder would
+    # change how every later row plans
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    from iceberg_python_spark.spark_datasource import register_data_source
+
+    register_data_source(spark)
 
     wh_dir = tempfile.mkdtemp(prefix="ips_wh_")
     cat = SqliteCatalog("entry", wh_dir, spark)
@@ -3331,9 +3339,6 @@ def _q_spark_datasource_scan(spark, env):
     # per data file, each read executor-side with pyarrow. Must produce
     # EXACTLY the rows of the native JVM scan, so the oracle is the
     # table's plain SELECT — the same hard signal the native path has.
-    from iceberg_python_spark.spark_datasource import register_data_source
-
-    register_data_source(spark)
     return (
         spark.read.format("iceberg_python_spark")
         .option("table_location", env["part"].location)
@@ -3352,9 +3357,7 @@ def _q_spark_datasource_write(spark, env):
     import uuid as _uuid
 
     from iceberg_python_spark.schema import schema_from_spark
-    from iceberg_python_spark.spark_datasource import register_data_source
 
-    register_data_source(spark)
     cat = env["catalog"]
     run = _uuid.uuid4().hex[:8]
     src = (
@@ -4210,9 +4213,7 @@ def _q_spark_datasource_rt(spark, env):
     # then one InputPartition per data file read back with pyarrow;
     # the oracle is the source subset straight off DuckDB
     from iceberg_python_spark.schema import schema_from_spark
-    from iceberg_python_spark.spark_datasource import register_data_source
 
-    register_data_source(spark)
     cat = env["catalog"]
     if "dsv2_rt" not in env:
         src = (

@@ -131,73 +131,13 @@ class _Reader:
         return self.read(self.read_long())
 
 
-def _decode(schema: Any, r: _Reader) -> Any:
-    if isinstance(schema, str):
-        if schema == "null":
-            return None
-        if schema == "boolean":
-            return r.read(1) == b"\x01"
-        if schema in ("int", "long"):
-            return r.read_long()
-        if schema == "float":
-            return struct.unpack("<f", r.read(4))[0]
-        if schema == "double":
-            return struct.unpack("<d", r.read(8))[0]
-        if schema == "bytes":
-            return r.read_bytes()
-        if schema == "string":
-            return r.read_bytes().decode("utf-8")
-        raise ValueError(f"unknown primitive {schema!r}")
-    if isinstance(schema, list):  # union: branch index then value
-        return _decode(schema[r.read_long()], r)
-    t = schema["type"]
-    if t == "record":
-        return {f["name"]: _decode(f["type"], r) for f in schema["fields"]}
-    if t == "array":
-        out = []
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                r.read_long()  # byte size of block; unused for in-memory decode
-                n = -n
-            items = schema["items"]
-            for _ in range(n):
-                out.append(_decode(items, r))
-        return out
-    if t == "map":
-        out_m: Dict[str, Any] = {}
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                r.read_long()
-                n = -n
-            values = schema["values"]
-            for _ in range(n):
-                k = r.read_bytes().decode("utf-8")
-                out_m[k] = _decode(values, r)
-        return out_m
-    if t == "fixed":
-        raw = r.read(schema["size"])
-        return _apply_logical(schema, raw)
-    if t == "enum":
-        return schema["symbols"][r.read_long()]
-    if t in _PRIMITIVES:
-        raw = _decode(t, r)
-        return _apply_logical(schema, raw)
-    raise ValueError(f"unknown Avro type {t!r}")
-
-
 def _compile(schema: Any):
     """Compile a (normalized) schema into a closure tree — one function
     per schema node, resolved ONCE instead of per decoded value. This is
     the pure-Python stand-in for the reference's Cython decoder
-    (avro/decoder_fast.pyx): same interface as ``_decode(schema, r)``
-    but ~2-3× faster on manifest-shaped records, which matters because
-    the distributed planner decodes Avro manifests in executor tasks."""
+    (avro/decoder_fast.pyx): the returned function decodes one value
+    from a ``_Reader``. It is the module's one decoder: file headers and
+    records both go through it."""
     if isinstance(schema, str):
         if schema == "null":
             return lambda r: None
@@ -446,7 +386,7 @@ def read_file(source: Union[str, bytes, BinaryIO]) -> Tuple[Any, Dict[str, bytes
     if r.read(4) != MAGIC:
         raise ValueError("not an Avro object container file (bad magic)")
     meta_schema = parse_schema({"type": "map", "values": "bytes"})
-    meta = _decode(meta_schema, r)
+    meta = _compile(meta_schema)(r)
     sync = r.read(SYNC_SIZE)
     schema = parse_schema(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode()

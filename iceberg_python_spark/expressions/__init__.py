@@ -208,6 +208,10 @@ class And(BooleanExpression):
     def __invert__(self) -> "BooleanExpression":
         return Or(~self.left, ~self.right)
 
+    def __reduce__(self):
+        # rebuild through __new__'s arguments (pickle would call it with none)
+        return (And, (self.left, self.right))
+
     def __repr__(self) -> str:
         return f"And({self.left!r}, {self.right!r})"
 
@@ -235,6 +239,10 @@ class Or(BooleanExpression):
     def __invert__(self) -> "BooleanExpression":
         return And(~self.left, ~self.right)
 
+    def __reduce__(self):
+        # rebuild through __new__'s arguments (pickle would call it with none)
+        return (Or, (self.left, self.right))
+
     def __repr__(self) -> str:
         return f"Or({self.left!r}, {self.right!r})"
 
@@ -255,6 +263,9 @@ class Not(BooleanExpression):
 
     def __invert__(self) -> "BooleanExpression":
         return self.child
+
+    def __reduce__(self):
+        return (Not, (self.child,))
 
     def __repr__(self) -> str:
         return f"Not({self.child!r})"

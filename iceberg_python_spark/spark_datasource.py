@@ -23,17 +23,24 @@ primary, fastest path — native JVM parquet scan with pushdown):
 
 Table handle: ``table_location`` (the table root; the current metadata
 file is discovered via ``metadata/version-hint.text``, which every
-catalog commit writes) or an explicit ``metadata_location``. All IO in
-this module is pure Python (pyarrow + fileio's no-JVM paths) because
+catalog commit writes) or an explicit ``metadata_location``; either is
+opened with ``StaticTable.from_metadata`` and no session, because
 DataSource code runs inside Python workers with no SparkSession.
 
+Planning goes through the library's own planners: the batch reader
+plans ``DataScan.plan_files`` (pushed filters added with
+``DataScan.filter``, so manifests prune by partition summaries and
+files by partition tuples and min/max metrics), the stream reader
+plans ``IncrementalAppendScan.plan_files``. Each partition reads its
+file by field ID, under the file's commit-time schema and name map —
+the rule ``table._read_tasks`` follows — so a renamed column reads its
+values and a column the file lacks reads as nulls.
+
 Scope (documented, loud): reads the CURRENT schema; data files only —
-a table carrying position/equality delete files raises (use
+a planned task carrying position/equality deletes raises (use
 table.scan(), which applies deletes; or compact() first). Filter
-pushdown prunes FILES (partition-tuple + min/max-metrics evaluation,
-the same pure-Python evaluator stack the native planner uses); row
-groups and rows are filtered by Spark after the source, so pruning is
-always sound.
+pushdown only prunes FILES; row groups and rows are filtered by Spark
+after the source, so pruning is always sound.
 
 Reference anchor: this surface has no pyiceberg equivalent — it is the
 Spark-native answer to pyiceberg's role of "library that hands your
@@ -43,7 +50,6 @@ engine a table".
 from __future__ import annotations
 
 import json
-import posixpath
 from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
 
 from pyspark.sql.datasource import (
@@ -57,65 +63,17 @@ from pyspark.sql.datasource import (
 )
 
 
-# ---------------------------------------------------------------------------
-# pure-Python planning helpers (no SparkSession anywhere in this module)
-# ---------------------------------------------------------------------------
+def _open_table(options: Dict[str, str]):
+    """The table the options name, opened catalog-free with no session."""
+    from .table import StaticTable
 
-
-def _resolve_metadata_location(options: Dict[str, str]) -> str:
-    loc = options.get("metadata_location")
-    if loc:
-        return loc
-    root = options.get("table_location")
-    if not root:
+    loc = options.get("metadata_location") or options.get("table_location")
+    if not loc:
         raise ValueError(
             "iceberg_python_spark source needs option 'table_location' (table root) "
             "or 'metadata_location' (explicit metadata JSON)"
         )
-    from .io import fileio
-
-    hint = posixpath.join(root, "metadata", "version-hint.text")
-    if not fileio.exists(hint):
-        raise ValueError(f"no metadata/version-hint.text under {root!r}")
-    base = fileio.read_text(hint).strip()
-    if "/" in base:
-        # full metadata path: the table writes metadata elsewhere via
-        # write.metadata.path, but the hint stays at the probe location
-        return base
-    if not base.endswith(".metadata.json"):
-        base = f"v{base}.metadata.json"
-    return posixpath.join(root, "metadata", base)
-
-
-def _load_metadata(options: Dict[str, str]):
-    from .table.metadata import TableMetadata
-
-    return TableMetadata.read(_resolve_metadata_location(options))
-
-
-def _live_data_entries(meta, snapshot) -> List[Tuple[int, Dict[str, Any]]]:
-    """(spec_id, data_file) entries of a snapshot; raises on delete
-    content (scope)."""
-    from .table.manifests import CONTENT_DATA, STATUS_DELETED, read_manifest, read_manifest_list
-
-    if snapshot is None:
-        return []
-    schema = meta.schema()
-    entries: List[Tuple[int, Dict[str, Any]]] = []
-    for m in read_manifest_list(snapshot.manifest_list, meta.spec_by_id, schema):
-        spec = meta.spec_by_id(m["spec_id"])
-        for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-            if e["status"] == STATUS_DELETED:
-                continue
-            d = e["data_file"]
-            if d.get("content", CONTENT_DATA) != CONTENT_DATA:
-                raise ValueError(
-                    "iceberg_python_spark source reads data files only; this table "
-                    "carries delete files — scan it via table.scan() (which applies "
-                    "deletes) or compact() first"
-                )
-            entries.append((m["spec_id"], d))
-    return entries
+    return StaticTable.from_metadata(loc, None)
 
 
 def _spark_filters_to_expression(filters):
@@ -174,75 +132,38 @@ def _spark_filters_to_expression(filters):
     return (and_all(supported) if supported else AlwaysTrue()), len(supported)
 
 
-def _prune_entries(meta, entries, expr):
-    """File-level pruning with the SAME pure-Python evaluator stack the
-    native scan's driver planner uses (plan_files): bind the filter to
-    the current schema, project it per-spec into partition space for
-    exact partition-tuple evaluation, and bound-check column min/max/
-    null metrics. Advisory-only: a kept file may still contain no
-    matching rows (Spark filters after the scan)."""
-    from .expressions import AlwaysFalse, AlwaysTrue, bind
-    from .expressions.visitors import expression_evaluator, inclusive_metrics_evaluator
-
-    bound = bind(expr, meta.schema())
-    if isinstance(bound, AlwaysTrue):
-        return entries
-    if isinstance(bound, AlwaysFalse):
-        return []
-    metrics_eval = inclusive_metrics_evaluator(bound)
-    part_eval_by_spec: Dict[int, Any] = {}
-    out = []
-    for spec_id, d in entries:
-        if spec_id not in part_eval_by_spec:
-            spec = meta.spec_by_id(spec_id)
-            pf = spec.inclusive_projection(meta.schema(), bound)
-            part_eval_by_spec[spec_id] = None if isinstance(pf, AlwaysTrue) else (
-                AlwaysFalse() if isinstance(pf, AlwaysFalse) else expression_evaluator(pf)
-            )
-        pe = part_eval_by_spec[spec_id]
-        if isinstance(pe, AlwaysFalse):
-            continue
-        if pe is not None and not pe(d.get("partition", {})):
-            continue
-        if not metrics_eval(d):
-            continue
-        out.append((spec_id, d))
-    return out
+def _column_pairs(table, task) -> List[Tuple[Optional[str], str]]:
+    """(physical name, exposed name) per current-schema column of one
+    task's file, matched by field ID against the file's commit-time
+    schema and name map; physical is None for an ID the file lacks."""
+    meta = table.metadata
+    exposed = meta.schema()
+    d = task.data_file
+    renames = d.get("name_map") or {}
+    file_schema = meta.schema_by_id(d.get("schema_id", exposed.schema_id))
+    physical = {f.field_id: renames.get(f.field_id, f.name) for f in file_schema.fields}
+    return [(physical.get(f.field_id), f.name) for f in exposed.fields]
 
 
-def _appended_files_between(meta, from_id: Optional[int], to_id: Optional[int]) -> List[str]:
-    """ADDED data files of append snapshots in (from_id, to_id] —
-    incremental-append-scan semantics, pure Python."""
-    from .table import Operation, _ancestor_chain
-    from .table.manifests import CONTENT_DATA, STATUS_ADDED, read_manifest, read_manifest_list
-
-    chain = [s for s in _ancestor_chain(meta, from_id, to_id) if s.operation == Operation.APPEND]
-    schema = meta.schema()
-    paths: List[str] = []
-    # Attribute each manifest to exactly ONE snapshot (the one that
-    # added it): a manifest carried forward into a later snapshot's
-    # manifest list still has its original added_snapshot_id and ADDED
-    # entries, so filtering against the whole chain would double-count
-    # files whenever the range spans multiple appends (backfill/restart).
-    for s in chain:
-        for m in read_manifest_list(s.manifest_list, meta.spec_by_id, schema):
-            if m.get("added_snapshot_id") != s.snapshot_id:
-                continue
-            spec = meta.spec_by_id(m["spec_id"])
-            for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-                d = e["data_file"]
-                if (
-                    e["status"] == STATUS_ADDED
-                    and e["snapshot_id"] == s.snapshot_id
-                    and d.get("content", CONTENT_DATA) == CONTENT_DATA
-                ):
-                    paths.append(d["file_path"])
-    return paths
+def _partitions(table, tasks) -> List[InputPartition]:
+    """One partition per planned task. Spark requires >=1 partition per
+    planned scan (an empty table, or an equal start/end replay range):
+    a sentinel empty partition yields zero rows."""
+    if any(t.delete_files or t.eq_delete_files for t in tasks):
+        raise ValueError(
+            "iceberg_python_spark source reads data files only; this table "
+            "carries delete files — scan it via table.scan() (which applies "
+            "deletes) or compact() first"
+        )
+    return [_FilePartition(t.file_path, _column_pairs(table, t)) for t in tasks] or [_FilePartition("", [])]
 
 
-def _arrow_batches_for_file(path: str, field_names: Sequence[str]) -> Iterator[Any]:
-    """Read one parquet file with pyarrow, projected+reordered to the
-    table schema by name (absent columns filled with nulls)."""
+def _arrow_batches_for_file(path: str, columns: Sequence[Tuple[Optional[str], str]]) -> Iterator[Any]:
+    """Read one parquet file with pyarrow: each (physical, exposed) pair
+    reads the physical column under its exposed name; a column absent
+    from the file reads as nulls. An empty path reads nothing."""
+    if not path:
+        return
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -255,57 +176,49 @@ def _arrow_batches_for_file(path: str, field_names: Sequence[str]) -> Iterator[A
     else:
         src = fileio.to_local(path)
     # project at the parquet reader: only the requested columns decode
-    present = pq.ParquetFile(src).schema_arrow.names
-    want = [n for n in field_names if n in present]
-    table = pq.read_table(src, columns=want)
-    cols = []
+    present = set(pq.ParquetFile(src).schema_arrow.names)
+    table = pq.read_table(src, columns=[p for p, _ in columns if p in present])
     n = table.num_rows
-    for name in field_names:
-        cols.append(table.column(name) if name in table.column_names else pa.nulls(n))
-    out = pa.table(dict(zip(field_names, cols)))
+    out = pa.table({name: table.column(p) if p in present else pa.nulls(n) for p, name in columns})
     yield from out.to_batches(max_chunksize=1 << 16)
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str):
+    def __init__(self, path: str, columns: List[Tuple[Optional[str], str]]):
         self.path = path
+        self.columns = columns
 
 
 class IcebergBatchReader(DataSourceReader):
-    """One InputPartition per data file; each executor Python worker
-    reads its file with pyarrow and yields Arrow record batches.
-    ``pushFilters`` prunes FILES (partition tuples + min/max metrics,
-    the native planner's evaluator stack); every filter is returned to
-    Spark for row-level application, so pruning is advisory and always
-    sound."""
+    """One InputPartition per task ``DataScan.plan_files`` plans; each
+    executor Python worker reads its file with pyarrow and yields Arrow
+    record batches. ``pushFilters`` adds the translated filters to the
+    scan, so they prune manifests and files; every filter is returned
+    to Spark for row-level application, so pruning is advisory and
+    always sound."""
 
     def __init__(self, options: Dict[str, str]):
         self.options = dict(options)
-        self._meta = _load_metadata(self.options)
-        self._field_names = [f.name for f in self._meta.schema().fields]
+        table = _open_table(self.options)
         snapshot_id = self.options.get("snapshot_id")
-        snap = (
-            self._meta.snapshot_by_id(int(snapshot_id))
-            if snapshot_id is not None
-            else self._meta.current_snapshot()
-        )
-        self._entries = _live_data_entries(self._meta, snap)
+        self._scan = table.scan(snapshot_id=int(snapshot_id) if snapshot_id is not None else None)
 
     def pushFilters(self, filters):
+        from .expressions import bind
+
         expr, n_supported = _spark_filters_to_expression(filters)
         if n_supported:
-            self._entries = _prune_entries(self._meta, self._entries, expr)
+            # bound against the exposed (current) schema: a snapshot_id
+            # scan would otherwise bind to that snapshot's schema
+            self._scan = self._scan.filter(bind(expr, self._scan.table.schema()))
         # row-level filtering stays with Spark: file skipping is advisory
         return filters
 
     def partitions(self) -> List[InputPartition]:
-        paths = [d["file_path"] for _sid, d in self._entries]
-        return [_FilePartition(p) for p in paths] or [_FilePartition("")]
+        return _partitions(self._scan.table, self._scan.plan_files())
 
     def read(self, partition: _FilePartition):
-        if not partition.path:
-            return iter(())
-        return _arrow_batches_for_file(partition.path, self._field_names)
+        return _arrow_batches_for_file(partition.path, partition.columns)
 
 
 class IcebergStreamReader(DataSourceStreamReader):
@@ -313,8 +226,8 @@ class IcebergStreamReader(DataSourceStreamReader):
     offset = {"snapshot_id": id} (-1 = before the first snapshot), each
     micro-batch covers the snapshots in (start, end], and
     ``partitions(start, end)`` returns one InputPartition per data file
-    appended in that range. Only the manifest walk happens driver-side
-    (metadata-scale); the rows themselves are read by executor Python
+    appended in that range, as ``IncrementalAppendScan.plan_files``
+    plans it. Only planning happens driver-side (metadata-scale); the rows themselves are read by executor Python
     workers as Arrow record batches — a large backfill batch (first
     batch = every existing append) therefore fans out across the
     cluster instead of materializing on the driver, matching the batch
@@ -322,8 +235,6 @@ class IcebergStreamReader(DataSourceStreamReader):
 
     def __init__(self, options: Dict[str, str]):
         self.options = dict(options)
-        meta = _load_metadata(self.options)
-        self._field_names = [f.name for f in meta.schema().fields]
         start = self.options.get("starting_snapshot_id", self.options.get("starting-snapshot-id"))
         self._start = int(start) if start is not None else -1
 
@@ -331,24 +242,19 @@ class IcebergStreamReader(DataSourceStreamReader):
         return {"snapshot_id": self._start}
 
     def latestOffset(self) -> dict:
-        meta = _load_metadata(self.options)
-        current = meta.current_snapshot_id
+        current = _open_table(self.options).metadata.current_snapshot_id
         return {"snapshot_id": self._start if current is None else current}
 
     def partitions(self, start: dict, end: dict) -> List[InputPartition]:
+        from .table import IncrementalAppendScan
+
         start_id = start.get("snapshot_id", -1)
-        from_id = None if start_id == -1 else start_id
-        meta = _load_metadata(self.options)
-        paths = _appended_files_between(meta, from_id, end.get("snapshot_id"))
-        # Spark requires >=1 partition per planned batch (an equal
-        # start/end replay plans an empty range): a sentinel empty
-        # partition yields zero rows
-        return [_FilePartition(p) for p in paths] or [_FilePartition("")]
+        table = _open_table(self.options)
+        scan = IncrementalAppendScan(table, None if start_id == -1 else start_id, end.get("snapshot_id"))
+        return _partitions(table, scan.plan_files())
 
     def read(self, partition: _FilePartition):
-        if not partition.path:
-            return iter(())
-        return _arrow_batches_for_file(partition.path, self._field_names)
+        return _arrow_batches_for_file(partition.path, partition.columns)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the query checkpoint
@@ -683,8 +589,7 @@ class IcebergDataSource(DataSource):
     def schema(self):
         from pyspark.sql import types as T
 
-        meta = _load_metadata(self.options)
-        base = meta.schema().to_spark()
+        base = _open_table(self.options).schema().to_spark()
         # plain fields only: the streaming runner round-trips this schema
         # through Arrow and asserts equality — our field-id metadata (and
         # non-null flags the Python rows can't prove) would break it

@@ -33,7 +33,7 @@ import time
 import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, replace as _dc_replace
-from typing import Any, Callable, Dict, Iterable, List, Mapping, Optional, Sequence, Set, Tuple, Union
+from typing import Any, Callable, Dict, Iterable, Iterator, List, Mapping, Optional, Sequence, Set, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2834,22 +2834,7 @@ class Transaction:
                 e["data_file"]["file_path"] for e in self.table._live_entries(head_snap)
             }
         # data files added by the concurrent snapshots
-        concurrent_added: List[Dict[str, Any]] = []
-        if chain:
-            schema = fresh.schema()
-            snapshot_ids = {s.snapshot_id for s in chain}
-            for s in chain:
-                for m in read_manifest_list(s.manifest_list, fresh.spec_by_id, schema):
-                    if m["added_snapshot_id"] not in snapshot_ids:
-                        continue
-                    spec = fresh.spec_by_id(m["spec_id"])
-                    for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-                        if (
-                            e["status"] == STATUS_ADDED
-                            and e["snapshot_id"] in snapshot_ids
-                            and e["data_file"].get("content", 0) == CONTENT_DATA
-                        ):
-                            concurrent_added.append(e["data_file"])
+        concurrent_added = [e["data_file"] for _spec, e in _added_data_entries(fresh, chain)]
 
         for s in self._staged:
             removed = s["removed_paths"]
@@ -2899,6 +2884,7 @@ class _PlanInputs:
         bound: BooleanExpression,
         manifest_files: Optional[List[Dict[str, Any]]] = None,
         server: bool = False,
+        spark: Optional[SparkSession] = None,
     ):
         self.metadata = metadata
         self.snap = snap
@@ -2912,8 +2898,9 @@ class _PlanInputs:
             if m.get("content", CONTENT_DATA) == CONTENT_DATA
         )
         threshold = int(metadata.properties.get("read.plan.distributed-threshold", "200000"))
-        #: above the threshold, pruning runs as a Spark job
-        self.distributed = manifest_files is not None and self.est_entries > threshold
+        #: above the threshold, pruning runs as a Spark job — given a
+        #: session to run it in (the Python DataSource plans without one)
+        self.distributed = spark is not None and manifest_files is not None and self.est_entries > threshold
         self._part_filters: Dict[int, BooleanExpression] = {}
         self._residuals: Dict[Tuple, BooleanExpression] = {}
 
@@ -3094,7 +3081,7 @@ class DataScan:
         ):
             return _PlanInputs(metadata, snap, schema, bound, server=True)
         manifest_files = read_manifest_list(snap.manifest_list, metadata.spec_by_id, schema)
-        return _PlanInputs(metadata, snap, schema, bound, manifest_files=manifest_files)
+        return _PlanInputs(metadata, snap, schema, bound, manifest_files=manifest_files, spark=self.table.spark)
 
     def plan_files(
         self, metadata: Optional[TableMetadata] = None, plan: Optional["_PlanInputs"] = None
@@ -3456,6 +3443,30 @@ def _ancestor_chain(
     return list(reversed(chain))
 
 
+def _added_data_entries(
+    meta: TableMetadata, snapshots: Sequence[Snapshot]
+) -> Iterator[Tuple[PartitionSpec, Dict[str, Any]]]:
+    """(spec, manifest entry) for every data file ADDED by one of
+    ``snapshots``. A manifest carried forward into later manifest lists
+    keeps its ``added_snapshot_id``, so it is read once."""
+    schema = meta.schema()
+    snapshot_ids = {s.snapshot_id for s in snapshots}
+    seen: Set[str] = set()
+    for s in snapshots:
+        for m in read_manifest_list(s.manifest_list, meta.spec_by_id, schema):
+            if m["added_snapshot_id"] not in snapshot_ids or m["manifest_path"] in seen:
+                continue
+            seen.add(m["manifest_path"])
+            spec = meta.spec_by_id(m["spec_id"])
+            for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
+                if (
+                    e["status"] == STATUS_ADDED
+                    and e["snapshot_id"] in snapshot_ids
+                    and e["data_file"].get("content", CONTENT_DATA) == CONTENT_DATA
+                ):
+                    yield spec, e
+
+
 class IncrementalAppendScan:
     """Rows appended between two snapshots — append snapshots only,
     ADDED entries only (reference table/__init__.py:2372-2554)."""
@@ -3507,31 +3518,21 @@ class IncrementalAppendScan:
         bound = bind(self.row_filter, schema)
         if isinstance(bound, AlwaysFalse):
             return []
-        snapshot_ids = {s.snapshot_id for s in self._snapshot_range()}
-        if not snapshot_ids:
-            return []
         metrics_eval = inclusive_metrics_evaluator(bound)
         plan = _PlanInputs(meta, meta.current_snapshot(), schema, bound)
         tasks = []
         seen: Set[str] = set()
-        for s in self._snapshot_range():
-            for m in read_manifest_list(s.manifest_list, meta.spec_by_id, schema):
-                if m["added_snapshot_id"] not in snapshot_ids:
-                    continue
-                spec = meta.spec_by_id(m["spec_id"])
-                for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-                    if e["status"] != STATUS_ADDED or e["snapshot_id"] not in snapshot_ids:
-                        continue
-                    d = e["data_file"]
-                    if d["file_path"] in seen:
-                        continue
-                    seen.add(d["file_path"])
-                    if not metrics_eval(d):
-                        continue
-                    res = plan.residual(spec, d.get("partition", {}))
-                    if isinstance(res, AlwaysFalse):
-                        continue
-                    tasks.append(FileScanTask(d, res))
+        for spec, e in _added_data_entries(meta, self._snapshot_range()):
+            d = e["data_file"]
+            if d["file_path"] in seen:
+                continue
+            seen.add(d["file_path"])
+            if not metrics_eval(d):
+                continue
+            res = plan.residual(spec, d.get("partition", {}))
+            if isinstance(res, AlwaysFalse):
+                continue
+            tasks.append(FileScanTask(d, res))
         return tasks
 
     def to_df(self) -> DataFrame:

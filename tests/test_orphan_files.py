@@ -1,6 +1,8 @@
 """remove_orphan_files: the RemoveOrphanFiles maintenance action."""
 
 import os
+import posixpath
+import shutil
 import time
 
 import pytest
@@ -177,8 +179,15 @@ def test_remove_orphan_files_many_snapshots_plan_bound(spark, catalog):
     t = catalog.create_table(
         "db.orph_many", schema_from_spark(df.schema), partition_spec=UNPARTITIONED
     )
-    for _ in range(200):
-        t.append(df)
+    t.append(df)
+    # the other 199 snapshots each commit a copy of that data file
+    # metadata-only: the claims need the snapshots, not 199 write jobs
+    entry = t._live_entries(t.current_snapshot())[0]
+    first = entry["data_file"]["file_path"]
+    for i in range(199):
+        copy = posixpath.join(posixpath.dirname(first), f"copy-{i}.parquet")
+        shutil.copyfile(to_local(first), to_local(copy))
+        t.register_data_files([dict(entry["data_file"], file_path=copy)])
     assert len(t.metadata.snapshots) == 200
 
     man_paths = sorted(

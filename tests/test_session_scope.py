@@ -10,7 +10,12 @@ one conf-scoped mechanism, pinned on the source.
   state stores use) and, in ``__spark_entry__.py``, by the warehouse
   bootstrap ``_wh`` that configures the driver's session once.
   Anything else would rewrite a session-global conf under sibling
-  overlapped builds."""
+  overlapped builds.
+- No registry builder (``_q_*`` in ``__spark_entry__.py``) registers
+  the package's Python DataSource: registering sets
+  ``spark.sql.python.filterPushdown.enabled`` on the driver's session,
+  so every row built after it would plan under another conf. The
+  bootstrap ``_wh`` registers it once."""
 
 import ast
 import pathlib
@@ -131,3 +136,35 @@ def test_guard_flags_each_forbidden_shape(tmp_path):
         ],
         "shuffle_width": ["loop() set", "loop() SQL", "loop() config"],
     }
+
+
+def _builders_calling(tree: ast.AST, callee: str):
+    """Top-level ``_q_*`` functions whose body calls ``callee``."""
+    for fn in tree.body:
+        if not (isinstance(fn, ast.FunctionDef) and fn.name.startswith("_q_")):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                f = node.func
+                if (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == callee:
+                    yield fn.name
+                    break
+
+
+def test_registry_builders_never_register_the_datasource():
+    entry = ast.parse((ROOT / "__spark_entry__.py").read_text())
+    wh = next(fn for fn in entry.body if isinstance(fn, ast.FunctionDef) and fn.name == "_wh")
+    assert not list(_builders_calling(entry, "register_data_source"))
+    assert any(
+        isinstance(n, ast.Call) and getattr(n.func, "id", None) == "register_data_source" for n in ast.walk(wh)
+    ), "the bootstrap no longer registers the DataSource"
+    # the guard sees a builder that registers it, by name or attribute
+    snippet = ast.parse(
+        "def _q_a(spark, env):\n"
+        "    register_data_source(spark)\n"
+        "def _q_b(spark, env):\n"
+        "    sd.register_data_source(spark)\n"
+        "def _q_c(spark, env):\n"
+        "    return spark.read.format('iceberg_python_spark').load()\n"
+    )
+    assert list(_builders_calling(snippet, "register_data_source")) == ["_q_a", "_q_b"]

@@ -13,7 +13,12 @@
   (``register_data_source`` or ``.format("iceberg_python_spark")``):
   every scan reads its planned tasks through ``_read_tasks``, and
   registering the source would set a session-wide conf on the caller's
-  session."""
+  session.
+- The Python DataSource (``spark_datasource.py``) plans through the
+  library's planners (``DataScan``, ``IncrementalAppendScan``) and
+  never walks manifests itself (``read_manifest``,
+  ``read_manifest_list``): a private walk is a second planner that
+  drifts from the first."""
 
 import ast
 import pathlib
@@ -33,6 +38,10 @@ LIST_READ_OWNER = "_read_paths"
 METADATA_OWNER = "_read_files"
 #: the package's Python DataSource format name
 DATASOURCE_FORMAT = "iceberg_python_spark"
+#: manifest readers only the library's planners call
+PLANNING_CALLS = {"read_manifest", "read_manifest_list"}
+#: modules that must plan through the library's planners
+NO_PRIVATE_PLANNING = {"spark_datasource.py"}
 
 
 def _receiver_names(node: ast.AST):
@@ -80,6 +89,8 @@ def _findings(tree: ast.AST):
                 name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
                 if name in ALLOWED_CALLERS:
                     yield "call", fn, name, child.lineno
+                if name in PLANNING_CALLS:
+                    yield "planning", fn, name, child.lineno
                 if name == "register_data_source" or (
                     name == "format"
                     and child.args
@@ -116,7 +127,7 @@ def _scan_package(root: pathlib.Path):
 def _offenders(root: pathlib.Path):
     """({kind: offending findings}, {kind: findings seen}). Every
     DataSource use offends: the guard runs it over the table layer."""
-    offenders = {"call": [], "list_read": [], "metadata": [], "datasource": []}
+    offenders = {"call": [], "list_read": [], "metadata": [], "datasource": [], "planning": []}
     seen = dict.fromkeys(offenders, 0)
     for kind, where, fn, detail in _scan_package(root):
         seen[kind] += 1
@@ -128,6 +139,8 @@ def _offenders(root: pathlib.Path):
             offenders[kind].append(f"{where} {fn}() references {detail}")
         elif kind == "datasource":
             offenders[kind].append(f"{where} {fn}() reads through the DataSource with {detail}()")
+        elif kind == "planning" and where.split(":")[0] in NO_PRIVATE_PLANNING:
+            offenders[kind].append(f"{where} {fn}() walks manifests with {detail}()")
     return offenders, seen
 
 
@@ -166,6 +179,7 @@ def test_guard_flags_a_direct_path_list_read(tmp_path):
         "list_read": ["scan() reads a path list with .parquet()", "scan() reads a path list with .orc()"],
         "metadata": ["scan() references _metadata.file_path"],
         "datasource": [],
+        "planning": [],
     }
 
 
@@ -188,4 +202,30 @@ def test_guard_flags_a_datasource_read(tmp_path):
     assert [o.split(" ", 1)[1] for o in offenders["datasource"]] == [
         "to_df() reads through the DataSource with register_data_source()",
         "to_df() reads through the DataSource with format()",
+    ]
+
+
+def test_datasource_plans_through_the_library():
+    offenders, seen = _offenders(PACKAGE)
+    assert seen["planning"], "no manifest read found; the guard no longer sees the planners"
+    assert not offenders["planning"], offenders["planning"]
+
+
+def test_guard_flags_a_private_manifest_walk(tmp_path):
+    """A manifest walk in the DataSource module is caught, by either
+    reader and either call shape; the same walk elsewhere is not."""
+    walk = (
+        "from iceberg_python_spark.table import manifests\n"
+        "from iceberg_python_spark.table.manifests import read_manifest\n"
+        "def live(meta, snap):\n"
+        "    for m in manifests.read_manifest_list(snap.manifest_list, meta.spec_by_id, meta.schema()):\n"
+        "        yield from read_manifest(m['manifest_path'], meta.schema(), None, manifest=m)\n"
+    )
+    (tmp_path / "spark_datasource.py").write_text(walk)
+    (tmp_path / "planner.py").write_text(walk)
+    offenders, seen = _offenders(tmp_path)
+    assert seen["planning"] == 4
+    assert [o.split(" ", 1)[1] for o in offenders["planning"]] == [
+        "live() walks manifests with read_manifest_list()",
+        "live() walks manifests with read_manifest()",
     ]

@@ -362,3 +362,67 @@ def test_datasource_stream_write_exactly_once(cat, spark, tmp_path):
     t = cat.load_table("db.w_stream")
     assert t.scan().to_df().count() == 100
     assert len(t.metadata.snapshots) == 2
+
+
+def _memory_stream_rows(spark, t, name, ckpt, n_rows):
+    """Rows the stream source delivers into a memory sink once it holds
+    ``n_rows`` (or after 90 s)."""
+    q = (
+        spark.readStream.format("iceberg_python_spark")
+        .option("table_location", t.location)
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        deadline = time.time() + 90
+        while time.time() < deadline and spark.sql(f"SELECT count(*) c FROM {name}").first().c < n_rows:
+            time.sleep(0.5)
+        return spark.sql(f"SELECT * FROM {name}").collect()
+    finally:
+        q.stop()
+
+
+def test_reads_resolve_columns_by_field_id(cat, spark, tmp_path):
+    """After rename_column the batch and streamed reads return the
+    renamed column's values, and a new column that reuses the old name
+    reads as null over the old file — the rows table.scan() returns."""
+    from iceberg_python_spark.types import LongType
+
+    register_data_source(spark)
+    df = spark.range(6).withColumn("v", F.col("id") * 3)
+    t = cat.create_table("db.src_rename", schema_from_spark(df.schema))
+    t.append(df)
+    t.update_schema().rename_column("v", "w").commit()
+    t = cat.load_table("db.src_rename")
+    t.update_schema().add_column("v", LongType()).commit()
+    t = cat.load_table("db.src_rename")
+    t.append(spark.range(6, 9).select("id", (F.col("id") * 3).alias("w"), F.lit(-1).cast("long").alias("v")))
+    want = sorted(tuple(r) for r in t.scan().to_df().collect())
+    assert want[0] == (0, 0, None) and want[-1] == (8, 24, -1)
+
+    batch = spark.read.format("iceberg_python_spark").option("table_location", t.location).load()
+    assert batch.schema.fieldNames() == ["id", "w", "v"]
+    assert sorted(tuple(r) for r in batch.collect()) == want
+    streamed = _memory_stream_rows(spark, t, "dsrc_rename_out", str(tmp_path / "ckpt_rename"), len(want))
+    assert sorted(tuple(r) for r in streamed) == want
+
+
+def test_batch_read_skips_deletes_of_removed_files(cat, spark):
+    """A delete file whose data file is gone applies to no planned
+    task, so the source reads the table instead of raising."""
+    register_data_source(spark)
+    df = spark.range(20).withColumn("v", F.col("id"))
+    t = cat.create_table("db.src_stale_del", schema_from_spark(df.schema))
+    t.append(df)
+    t.delete("id in (1, 7, 13)", mode="merge-on-read")
+    t.delete("id < 20")  # drops the whole data file, metadata-only
+    t.append(spark.range(20, 25).withColumn("v", F.col("id")))
+    live = t._live_entries(t.current_snapshot())
+    assert any(e["data_file"].get("content", 0) != 0 for e in live), "precondition: a live delete file"
+    assert not any(task.delete_files or task.eq_delete_files for task in t.scan().plan_files())
+    out = spark.read.format("iceberg_python_spark").option("table_location", t.location).load()
+    assert sorted(r.id for r in out.collect()) == list(range(20, 25))
